@@ -13,21 +13,6 @@ from __future__ import annotations
 import argparse
 
 
-def build_spark(cpus: int = 8):
-    """Local session factory (reference src/pipeline/embedding.py:17-26)."""
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("clinical-vector-search-spark")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument(
@@ -40,14 +25,22 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-queries", type=int, default=10)
     p.add_argument("--sigma", type=float, default=0.15, help="DP noise sigma")
     p.add_argument("--mmr-lambda", type=float, default=0.5)
-    p.add_argument("--cpus", type=int, default=8)
+    p.add_argument(
+        "--cpus", type=int, default=None,
+        help="local[N] cores (default: $SPARK_GRAFT_CPUS or the CPU count)",
+    )
     p.add_argument("--out", default=None, help="optional CSV output dir")
     args = p.parse_args(argv)
 
-    spark = build_spark(args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
     from clinical_vector_search_spark.pipeline import modes as M
+    from clinical_vector_search_spark.session import get_spark
+
+    spark = get_spark(
+        "clinical-vector-search-spark",
+        master=f"local[{args.cpus}]" if args.cpus else None,
+        shuffle_partitions=args.cpus,
+    )
+    spark.sparkContext.setLogLevel("ERROR")
 
     if args.mode == "baseline":
         df = M.baseline_mode(spark, args.data, args.topk, args.n_queries)

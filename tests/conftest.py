@@ -1,19 +1,23 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import SparkSession
+
+from clinical_vector_search_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("cvs-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "6g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    s = get_spark(
+        "cvs-spark-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={
+            "spark.driver.memory": "6g",
+            # Spark's default, which get_spark overrides: tests compare
+            # toPandas output, where Arrow renders array columns as NumPy
+            # arrays instead of Python lists
+            "spark.sql.execution.arrow.pyspark.enabled": "false",
+        },
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s

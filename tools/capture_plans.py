@@ -2,10 +2,11 @@
 
 Usage: python tools/capture_plans.py <tag> [suffix] [family ...]
 Writes plans/<tag>/<family>_<suffix>.txt (suffix defaults to "before").
-Families default to all. Mirrors bench.py's family construction exactly
-(same operators, same parameters) so the captured plan is the benched
-plan; persisted-state families build their state first, like the bench
-does outside its timed region.
+The tag is required, so a bare run never overwrites committed plans.
+Families default to all. The families are bench.families on bench's
+session settings, so the captured plan is the benched plan;
+persisted-state families run their prebuild first, as bench does outside
+its timed region.
 """
 
 from __future__ import annotations
@@ -13,425 +14,46 @@ from __future__ import annotations
 import io
 import os
 import sys
-import tempfile
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TAG = sys.argv[1] if len(sys.argv) > 1 else "r15"
-SUFFIX = sys.argv[2] if len(sys.argv) > 2 else "before"
-ONLY = set(sys.argv[3:])
-
-sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-spark = (
-    SparkSession.builder.master(f"local[{cpus}]")
-    .appName("cvs-spark-capture-plans")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.driver.memory", "24g")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-
-from clinical_vector_search_spark.functions import vector as V
-from clinical_vector_search_spark.operators.bm25 import bm25_index, bm25_topk_set
-from clinical_vector_search_spark.operators.dedup import (
-    minhash_candidate_pairs,
-    simhash_pd,
-)
-from clinical_vector_search_spark.pipeline.embedding import hash_embed_pd
-from clinical_vector_search_spark.pipeline.modes import (
-    baseline_mode,
-    dp_mode,
-    rag_mode,
-)
-from clinical_vector_search_spark.streaming.events import (
-    read_events,
-    sessionize,
-    tumbling_agg,
-)
-
-docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-QSET = [
-    (i, terms)
-    for i, terms in enumerate(
-        (
-            ["spark", "table"], ["query", "scan"], ["join", "merge"],
-            ["window", "agg"], ["stream", "batch"], ["key", "value"],
-            ["sort", "filter"], ["row", "column"], ["fast", "slow"],
-            ["data", "part"],
-        )
-    )
-]
-
-
-def bench_baseline():
-    return baseline_mode(spark, sf_dir, k=10, n_queries=10)
-
-
-def bench_dp():
-    return dp_mode(spark, sf_dir, k=10, n_queries=10)
-
-
-def bench_rag():
-    return rag_mode(spark, sf_dir, k=10, n_queries=5,
-                    candidate_k=40, bm25_topk=40)
-
-
-def bench_bm25_queryset():
-    return bm25_topk_set(bm25_index(docs, materialize=True), QSET, 10)
-
-
-def bench_embed_corpus():
-    return hash_embed_pd(docs.repartition(int(cpus)), 64)
-
-
-def bench_minhash_dedup():
-    return minhash_candidate_pairs(docs, num_hashes=8, rows_per_band=2)
-
-
-def bench_simhash():
-    return simhash_pd(docs, bits=32)
-
-
-def bench_tumbling():
-    return tumbling_agg(read_events(spark, sf_dir), 300)
-
-
-def bench_sessionize():
-    return sessionize(read_events(spark, sf_dir), 1800)
-
-
-def bench_pq_adc():
-    from clinical_vector_search_spark.operators.pq import (
-        knn_pq_adc_pd,
-        pq_codebooks_lcg,
-        pq_encode_pd,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", V.l2_normalize("embedding").alias("embedding")
-    )
-    books = pq_codebooks_lcg(64, 8, 16)
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    codes = pq_encode_pd(emb, books).withColumnRenamed("vec_id", "doc_id")
-    return knn_pq_adc_pd(queries, codes, books, 10)
-
-
-def bench_sessionize_skew():
-    from clinical_vector_search_spark.streaming.events import sessionize_skew
-
-    return sessionize_skew(read_events(spark, sf_dir), 1800, 7200)
-
-
-def bench_funnel():
-    from clinical_vector_search_spark.streaming.events import funnel
-
-    return funnel(read_events(spark, sf_dir), ["view", "click", "purchase"])
-
-
-def bench_retention():
-    from clinical_vector_search_spark.streaming.events import retention_cohorts
-
-    return retention_cohorts(read_events(spark, sf_dir), [1, 2, 7])
-
-
-def bench_span_dedup():
-    from clinical_vector_search_spark.operators.dedup import span_dedup
-
-    return span_dedup(docs)
-
-
-def bench_semantic_dedup():
-    from clinical_vector_search_spark.operators.dedup import semantic_dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return semantic_dedup(emb, dim=64, threshold=0.35, n_clusters=64)
-
-
-def bench_cdc_chunks():
-    from clinical_vector_search_spark.functions.text import cdc_chunk_rows_pd
-
-    return cdc_chunk_rows_pd(docs.repartition(int(cpus)), w=4, divisor=8)
-
-
-def bench_prep_pipeline():
-    import __spark_entry__ as E
-
-    return E.q_doc_prep_pipeline(spark, sf_dir)
-
-
-def bench_gapfill():
-    from clinical_vector_search_spark.streaming.events import resample_gapfill
-
-    return resample_gapfill(read_events(spark, sf_dir), 3600)
-
-
-def bench_session_paths():
-    from clinical_vector_search_spark.streaming.events import session_paths
-
-    return session_paths(read_events(spark, sf_dir), 1800, 10, 2)
-
-
-def bench_tfidf_queryset():
-    import __spark_entry__ as E
-
-    return E.q_retrieval_tfidf(spark, sf_dir)
-
-
-def bench_dsir():
-    import __spark_entry__ as E
-
-    return E.q_doc_dsir_weights(spark, sf_dir)
-
-
-def bench_winnowing():
-    import __spark_entry__ as E
-
-    return E.q_text_winnowing(spark, sf_dir)
-
-
-def bench_basket():
-    import __spark_entry__ as E
-
-    return E.q_rel_basket_pairs(spark, sf_dir)
-
-
-def bench_cusum():
-    import __spark_entry__ as E
-
-    return E.q_events_cusum(spark, sf_dir)
-
-
-_incr_state: dict = {}
-
-
-def bench_incremental_dedup():
-    from clinical_vector_search_spark.operators.dedup import (
-        dedup_groups,
-        dedup_groups_incremental,
-        minhash_band_buckets,
-        minhash_candidate_pairs,
-        minhash_pairs_incremental,
-        minhash_signatures,
-    )
-
-    if not _incr_state:
-        d = docs.select("doc_id", "text")
-        corpus = d.filter(F.col("doc_id") < 400)
-        _incr_state["batch"] = d.filter(
-            F.col("doc_id") >= 400
-        ).localCheckpoint()
-        _incr_state["idx"] = minhash_band_buckets(
-            minhash_signatures(corpus, 4, 3), 2
-        ).localCheckpoint()
-        _incr_state["labels"] = dedup_groups(
-            corpus.select("doc_id"),
-            minhash_candidate_pairs(corpus, 4, 2, 3),
-        )
-    new_pairs = minhash_pairs_incremental(
-        _incr_state["batch"], _incr_state["idx"], 4, 2, 3
-    )
-    return dedup_groups_incremental(
-        _incr_state["labels"],
-        new_pairs,
-        _incr_state["batch"].select("doc_id"),
-    )
-
-
-_ann_state: dict = {}
-
-
-def bench_incremental_ann():
-    from clinical_vector_search_spark.operators.pq import (
-        ivfpq_index_add,
-        ivfpq_index_delete,
-        knn_ivfpq_codes,
-        pq_codebooks_lcg,
-        read_ivfpq_index,
-    )
-
-    if not _ann_state:
-        v = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", V.l2_normalize("embedding").alias("embedding")
-        )
-        _ann_state["books"] = pq_codebooks_lcg(64, 8, 16)
-        _ann_state["idx"] = tempfile.mkdtemp(prefix="cvs_plans_ivfpq_")
-        _ann_state["batch"] = v.filter(
-            F.col("vec_id") % 8 == 3
-        ).localCheckpoint()
-        _ann_state["queries"] = v.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        ).localCheckpoint()
-        _ann_state["corpus"] = v
-        _ann_state["dead"] = tempfile.mkdtemp(prefix="cvs_plans_tomb_")
-        ivfpq_index_delete(
-            spark, v.filter(F.col("vec_id") % 16 == 5), 0,
-            _ann_state["dead"],
-        )
-        ivfpq_index_add(
-            spark, v.filter(F.col("vec_id") % 8 != 3), 0,
-            _ann_state["idx"], 64, _ann_state["books"], n_centroids=16,
-        )
-    ivfpq_index_add(
-        spark, _ann_state["batch"], 1, _ann_state["idx"], 64,
-        _ann_state["books"], n_centroids=16, encoder="pd",
-    )
-    return knn_ivfpq_codes(
-        _ann_state["queries"],
-        read_ivfpq_index(spark, _ann_state["idx"]),
-        10, 64, _ann_state["books"], n_centroids=16,
-        doc_id="vec_id", n_probe=4,
-    )
-
-
-def bench_refine_serving():
-    from clinical_vector_search_spark.operators.pq import (
-        knn_refine_codes,
-        read_ivfpq_index,
-    )
-
-    if not _ann_state:
-        bench_incremental_ann()
-    return knn_refine_codes(
-        _ann_state["queries"],
-        read_ivfpq_index(
-            spark, _ann_state["idx"], tombstone_path=_ann_state["dead"],
-        ),
-        _ann_state["corpus"],
-        10, 64, _ann_state["books"], n_centroids=16,
-        k_coarse=50, doc_id="vec_id", n_probe=4,
-    )
-
-
-_bm25_state: dict = {}
-
-
-def bench_incremental_bm25():
-    from clinical_vector_search_spark.operators.bm25 import (
-        bm25_index_add,
-        bm25_read_index,
-        bm25_topk_set,
-    )
-
-    if not _bm25_state:
-        d = docs.select("doc_id", "text")
-        _bm25_state["dir"] = tempfile.mkdtemp(prefix="cvs_plans_bm25_")
-        _bm25_state["batch"] = d.filter(
-            F.col("doc_id") % 10 == 7
-        ).localCheckpoint()
-        bm25_index_add(
-            spark, d.filter(F.col("doc_id") % 10 != 7), 0,
-            _bm25_state["dir"],
-        )
-    bm25_index_add(spark, _bm25_state["batch"], 1, _bm25_state["dir"])
-    return bm25_topk_set(
-        bm25_read_index(spark, _bm25_state["dir"]), QSET, 10
-    )
-
-
-_sem_state: dict = {}
-
-
-def bench_incremental_semantic():
-    from clinical_vector_search_spark.operators.dedup import (
-        _assignment_frame,
-        semantic_pairs_incremental,
-    )
-
-    if not _sem_state:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        _sem_state["batch"] = emb.filter(
-            F.col("vec_id") % 10 == 7
-        ).localCheckpoint()
-        _sem_state["idx"] = _assignment_frame(
-            emb.filter(F.col("vec_id") % 10 != 7), 64, 64
-        ).localCheckpoint()
-    return semantic_pairs_incremental(
-        _sem_state["batch"], _sem_state["idx"], 64,
-        threshold=0.35, n_clusters=64,
-    )
-
-
-def bench_pricing():
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(F.sum("l_quantity").alias("sum_qty"),
-             F.sum("l_extendedprice").alias("sum_base"),
-             F.avg("l_discount").alias("avg_disc"),
-             F.count("*").alias("n"))
-    )
-
-
-benches = {
-    "baseline_knn": bench_baseline,
-    "dp_pipeline": bench_dp,
-    "rag_hybrid_mmr": bench_rag,
-    "bm25_queryset10": bench_bm25_queryset,
-    "embed_corpus": bench_embed_corpus,
-    "minhash_dedup": bench_minhash_dedup,
-    "simhash": bench_simhash,
-    "events_tumbling": bench_tumbling,
-    "events_sessionize": bench_sessionize,
-    "events_sessionize_skew": bench_sessionize_skew,
-    "pq_adc": bench_pq_adc,
-    "events_funnel": bench_funnel,
-    "events_retention": bench_retention,
-    "span_dedup": bench_span_dedup,
-    "semantic_dedup": bench_semantic_dedup,
-    "cdc_chunks": bench_cdc_chunks,
-    "prep_pipeline": bench_prep_pipeline,
-    "tfidf_queryset3": bench_tfidf_queryset,
-    "events_gapfill": bench_gapfill,
-    "events_session_paths": bench_session_paths,
-    "rel_pricing_summary": bench_pricing,
-    "dsir_weights": bench_dsir,
-    "winnowing_fp": bench_winnowing,
-    "basket_pairs": bench_basket,
-    "events_cusum": bench_cusum,
-    "incremental_dedup": bench_incremental_dedup,
-    "incremental_ann": bench_incremental_ann,
-    "refine_serving": bench_refine_serving,
-    "incremental_bm25": bench_incremental_bm25,
-    "incremental_semantic": bench_incremental_semantic,
-}
-
-out_dir = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans", TAG,
-)
-os.makedirs(out_dir, exist_ok=True)
-
-for name, fn in benches.items():
-    if ONLY and name not in ONLY:
-        continue
-    try:
-        df = fn()
-        buf = io.StringIO()
-        stdout, sys.stdout = sys.stdout, buf
+from contextlib import redirect_stdout
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+
+def main(argv: list[str]) -> int:
+    if not argv:
+        print(__doc__, file=sys.stderr)
+        return 2
+    tag = argv[0]
+    suffix = argv[1] if len(argv) > 1 else "before"
+    only = set(argv[2:])
+
+    import bench
+    from clinical_vector_search_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("cvs-spark-capture-plans", extra_conf=bench.BENCH_CONF)
+    spark.sparkContext.setLogLevel("ERROR")
+
+    out_dir = os.path.join(REPO, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    for name, (run, prebuild) in bench.families(spark, sf_dir).items():
+        if only and name not in only:
+            continue
         try:
-            df.explain("formatted")
-        finally:
-            sys.stdout = stdout
-        path = os.path.join(out_dir, f"{name}_{SUFFIX}.txt")
-        with open(path, "w") as fh:
-            fh.write(buf.getvalue())
-        print(f"wrote {path}")
-    except Exception as ex:  # noqa: BLE001
-        print(f"FAILED {name}: {ex}", file=sys.stderr)
+            if prebuild:
+                prebuild()
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                run().explain("formatted")
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(buf.getvalue())
+            print(f"wrote {path}")
+        except Exception as ex:  # noqa: BLE001
+            print(f"FAILED {name}: {ex}", file=sys.stderr)
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main(sys.argv[1:]))

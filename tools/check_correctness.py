@@ -1,9 +1,11 @@
 """Local twin of the driver's correctness gate.
 
-Runs every ``__spark_entry__.queries()`` entry at sf0.01 (or $SF_DIR) and
-compares it against ``oracle_sql()`` via DuckDB: row count, sorted column
-names, and an order-insensitive value hash over (columns sorted by name,
-rows sorted by all columns). Prints one line per query + a summary.
+Runs every ``__spark_entry__.queries()`` entry at sf0.01 (or
+$SPARK_GRAFT_SF_DIR) on local[$SPARK_GRAFT_CPUS] (session.get_spark's
+core-count rule) and compares it against ``oracle_sql()`` via DuckDB:
+row count, sorted column names, and an order-insensitive value hash over
+(columns sorted by name, rows sorted by all columns). Prints one line
+per query + a summary.
 
 Usage: python tools/check_correctness.py [query ...]
 """
@@ -20,7 +22,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -64,15 +66,20 @@ def value_hash(df: pd.DataFrame) -> str:
 
 def main() -> int:
     import __spark_entry__ as E
-    from pyspark.sql import SparkSession
+    from clinical_vector_search_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('CPUS', '16')}]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "12g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
+    spark = get_spark(
+        "cvs-check-correctness",
+        # the partition count the oracle artifacts were produced under
+        shuffle_partitions=16,
+        extra_conf={
+            "spark.driver.memory": "12g",
+            # Spark's default, which get_spark overrides: without Arrow,
+            # toPandas renders array columns as Python lists (Arrow gives
+            # NumPy arrays), and the value hash is over that rendering
+            "spark.sql.execution.arrow.pyspark.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

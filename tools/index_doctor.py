@@ -188,14 +188,9 @@ def main(argv: list[str]) -> int:
     if not argv:
         print(__doc__)
         return 2
-    from pyspark.sql import SparkSession
+    from clinical_vector_search_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[2]")
-        .appName("index_doctor")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("index_doctor", master="local[2]")
     spark.sparkContext.setLogLevel("ERROR")
     for path in argv:
         print(render(diagnose(spark, path)))

@@ -22,7 +22,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 VERBOSE = "-v" in sys.argv
 
 results: list[tuple[str, bool, str]] = []
@@ -64,20 +64,21 @@ def n_any_join(plan: str) -> int:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        # default 100-char metadata truncation can cut ReadSchema short and
-        # make the column-pruning check vacuously pass (column "absent"
-        # because truncated, not because pruned)
-        .config("spark.sql.maxMetadataStringLength", "10000")
-        .getOrCreate()
+    from clinical_vector_search_spark.session import get_spark
+
+    spark = get_spark(
+        "cvs-plan-audit",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.driver.memory": "8g",
+            # default 100-char metadata truncation can cut ReadSchema short
+            # and make the column-pruning check vacuously pass (column
+            # "absent" because truncated, not because pruned)
+            "spark.sql.maxMetadataStringLength": "10000",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -2,11 +2,11 @@
 
 Usage: python tools/profile_family.py <family> [family ...] [--reps N]
 
-Runs each family exactly like bench.py (same session config, same noop
-materialization, warmup first), labelling every rep with a job
-description, then parses the event log to print per-job and per-stage
-durations — the local stand-in for the Spark UI's stage table
-(optimization guide §1.1/§7.1).
+Runs each family from bench.families exactly like bench.py (same session
+config, same noop materialization, state prebuild and warmup first),
+labelling every rep with a job description, then parses the event log
+to print per-job and per-stage durations — the local stand-in for the
+Spark UI's stage table (optimization guide §1.1/§7.1).
 """
 
 from __future__ import annotations
@@ -26,53 +26,40 @@ for a in sys.argv[1:]:
         reps = int(a.split("=")[1])
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 evdir = tempfile.mkdtemp(prefix="cvs_evlog_")
 
-from pyspark.sql import SparkSession
+import bench
+from clinical_vector_search_spark.session import get_spark
 
-spark = (
-    SparkSession.builder.master(f"local[{cpus}]")
-    .appName("cvs-spark-profile")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.driver.memory", "24g")
-    .config("spark.sql.adaptive.enabled", "true")
-    # mirror bench.py's session confs so profiles match benched plans
-    .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.eventLog.enabled", "true")
-    .config("spark.eventLog.compress", "false")
-    .config("spark.eventLog.dir", evdir)
-    .getOrCreate()
+spark = get_spark(
+    "cvs-spark-profile",
+    extra_conf={
+        **bench.BENCH_CONF,
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": evdir,
+    },
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-import tools._families as fam
-from tools.warmup_helper import warm_session
+bench.warm(spark, sf_dir)
+fams = bench.families(spark, sf_dir)
 
-warm_session(spark, sf_dir)
-benches = fam.build(spark, sf_dir, cpus)
-
-
-def materialize(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-# same JIT/HOF warmup spirit as bench.py: one throwaway run per family
+# one throwaway run per family after its state prebuild, like bench.py
+sc = spark.sparkContext
 for name in args:
-    sc = spark.sparkContext
-    fn = benches[name]
+    run, prebuild = fams[name]
+    if prebuild:
+        sc.setJobDescription(f"{name}|prebuild")
+        prebuild()
     sc.setJobDescription(f"{name}|warmup")
     t0 = time.time()
-    materialize(fn())
+    bench.materialize(run())
     print(f"{name} warmup: {time.time()-t0:.3f}s", file=sys.stderr)
     for r in range(reps):
         sc.setJobDescription(f"{name}|rep{r}")
         t0 = time.time()
-        materialize(fn())
+        bench.materialize(run())
         print(f"{name} rep{r}: {time.time()-t0:.3f}s", file=sys.stderr)
     sc.setJobDescription(None)
 

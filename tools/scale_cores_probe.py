@@ -4,20 +4,21 @@ VERDICT r15 task 5).
 The sf0.1 bench's 8-vs-32-core ratios are all ~1 because every family
 sits at the scheduling floor at that data size — the artifact is
 structurally unable to demonstrate parallel speedup for ANY family. This
-probe closes that gap: it replicates the sf0.1 tables x$FACTOR (default
-10 — the sf1-equivalent volume; ids shifted per replica so key
-cardinality scales with the data) and times the 5 heaviest PERF_r15
-families warm (best-of-2 after a throwaway cold run) at
-local[$CVS_PROBE_CORES]. Run it once per core count:
+probe closes that gap: it replicates the sf0.1 tables x10 (the
+sf1-equivalent volume; ids shifted per replica so key cardinality
+scales with the data) and times the 5 heaviest PERF_r15 families warm
+(best-of-2 after a throwaway cold run) at local[$SPARK_GRAFT_CPUS]
+(session.get_spark's core-count rule). Run it once per core count:
 
-    CVS_PROBE_CORES=32 python tools/scale_cores_probe.py > out32.json
-    CVS_PROBE_CORES=8  python tools/scale_cores_probe.py > out8.json
+    SPARK_GRAFT_CPUS=32 python tools/scale_cores_probe.py > out32.json
+    SPARK_GRAFT_CPUS=8  python tools/scale_cores_probe.py > out8.json
 
 and compare per-family times — event/doc-volume-bound families must show
 ratio >> 1 (8-core slower); any family that stays ~1 at this volume
 needs a named reason or a fix. One JSON line on stdout; progress on
-stderr. shuffle.partitions = cores (same convention as bench.py), AQE
-on, so partitioning stays scale-adaptive rather than tuned per run.
+stderr. Session = bench.py's (get_spark + BENCH_CONF): shuffle.partitions
+= cores, AQE on, so partitioning stays scale-adaptive rather than tuned
+per run. $SPARK_GRAFT_SF_DIR overrides the sf0.1 input.
 """
 
 from __future__ import annotations
@@ -32,9 +33,8 @@ from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
-CORES = int(os.environ.get("CVS_PROBE_CORES", "32"))
-FACTOR = int(os.environ.get("CVS_PROBE_FACTOR", "10"))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+FACTOR = 10
 
 
 def log(msg: str) -> None:
@@ -42,26 +42,17 @@ def log(msg: str) -> None:
 
 
 def main() -> None:
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CORES}]")
-        .appName(f"cvs-scale-cores-{CORES}")
-        .config("spark.sql.shuffle.partitions", str(CORES))
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from bench import BENCH_CONF
+    from clinical_vector_search_spark.session import get_spark
 
-    out: dict = {"cores": CORES, "factor": FACTOR, "sf_dir": SF_DIR}
+    spark = get_spark("cvs-scale-cores", extra_conf=BENCH_CONF)
+    spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
+
+    out: dict = {"cores": cores, "factor": FACTOR, "sf_dir": SF_DIR}
 
     def noop(df: DataFrame) -> None:
         df.write.format("noop").mode("overwrite").save()
@@ -103,7 +94,7 @@ def main() -> None:
         ),
     ).localCheckpoint()
     out["docs_rows"] = docs10.count()
-    log(f"docs x{FACTOR}: {out['docs_rows']} rows at local[{CORES}]")
+    log(f"docs x{FACTOR}: {out['docs_rows']} rows at local[{cores}]")
 
     # --- tfidf_queryset (10-query set over the 10x postings) ----------
     from clinical_vector_search_spark.operators.sparse import (
@@ -200,7 +191,7 @@ def main() -> None:
         bm25_topk_set,
     )
 
-    bdir = tempfile.mkdtemp(prefix=f"cvs_probe_bm25_c{CORES}_")
+    bdir = tempfile.mkdtemp(prefix=f"cvs_probe_bm25_c{cores}_")
     bm25_index_add(spark, corpus, 0, bdir)
     qset = [
         (i, terms)

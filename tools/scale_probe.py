@@ -28,9 +28,11 @@ expression (ids differ per replica, so noise differs) to keep near-dup
 pair density realistic — exact duplicates would quadratically inflate
 OUTPUT rows and measure result-writing, not comparison work.
 
-Usage: python tools/scale_probe.py  (~6-9 min; one JSON line at the end,
-plus human-readable progress on stderr). Results are summarized in
-README "10x scale probe".
+Usage: python tools/scale_probe.py  (~6-9 min at local[32]; one JSON line
+at the end, plus human-readable progress on stderr). Runs at
+local[$SPARK_GRAFT_CPUS] (session.get_spark's core-count rule) over
+$SPARK_GRAFT_SF_DIR (default sf0.1). Results are summarized in README
+"10x scale probe".
 """
 
 from __future__ import annotations
@@ -43,7 +45,7 @@ from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def log(msg: str) -> None:
@@ -58,17 +60,13 @@ def timed(fn) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    from clinical_vector_search_spark.session import get_spark
+
+    spark = get_spark(
+        "cvs-scale-probe", extra_conf={"spark.driver.memory": "24g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
 
