@@ -2551,7 +2551,7 @@ def q_evaluation_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_evaluation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1–A5 metric half of the evaluation harness over REAL mode outputs:
-    DP (expression path) and FHE rankings scored per query against the
+    DP and FHE rankings scored per query against the
     exact-kNN baseline — the deterministic, oracle-checkable core that
     q_evaluation_table wraps with wall-clock latency columns."""
     from clinical_vector_search_spark.pipeline.evaluate import evaluation_metrics
@@ -2942,20 +2942,16 @@ def q_rel_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint summary per doc (functions/text.py
     winnowing_fingerprints — Schleimer et al. SIGMOD 2003, the MOSS
-    plagiarism fingerprint): rightmost-min-per-window selection run as
-    ONE window-min via the (hash·2^21 + inverted-pos) packed key, exact
-    int64 on both engines. Summarized per doc (count, hash sum, min/max)
+    plagiarism fingerprint): rightmost-min-per-window selection over
+    the (hash·2^21 + inverted-pos) packed key, exact int64 on both
+    engines. Summarized per doc (count, hash sum, min/max)
     so the compare covers every selected fingerprint without shipping
-    raw fingerprint rows. r16: served by the Arrow twin
-    winnowing_fingerprints_pd (bit-identical, parity pytest; same SQL
-    oracle) — the expr path paid a doc-key exchange + two window sorts
-    plus per-gram conv()/substring md5 machinery for a per-doc
-    map-only computation."""
+    raw fingerprint rows."""
     from clinical_vector_search_spark.functions.text import (
-        winnowing_fingerprints_pd,
+        winnowing_fingerprints,
     )
 
-    fp = winnowing_fingerprints_pd(_docs(spark, sf_dir), k=3, w=4)
+    fp = winnowing_fingerprints(_docs(spark, sf_dir), k=3, w=4)
     return fp.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_fp"),
         F.sum("fp_hash").alias("fp_hash_sum"),
@@ -2970,15 +2966,13 @@ def q_dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     winnowing guarantee makes any shared run of ≥ w+k-1 words surface
     here). The join runs on fingerprint-hash postings at selected
     (≈ 2/(w+1)) density, ~60% fewer join rows than full-shingle
-    postings; the support cut keeps only pairs with real overlap.
-    r16: served by the Arrow twin winnowing_fingerprints_pd
-    (bit-identical, parity pytest; same SQL oracle)."""
+    postings; the support cut keeps only pairs with real overlap."""
     from clinical_vector_search_spark.functions.text import (
-        winnowing_fingerprints_pd,
+        winnowing_fingerprints,
     )
 
     fp = (
-        winnowing_fingerprints_pd(_docs(spark, sf_dir), k=3, w=4)
+        winnowing_fingerprints(_docs(spark, sf_dir), k=3, w=4)
         .select("doc_id", "fp_hash")
         .distinct()
     )
@@ -4579,13 +4573,9 @@ def q_dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_chunks, n_shared_chunks, shared_fraction). Chunk hashes are
     8-byte keys — the dedup shuffle never moves chunk text (same
     contract as span dedup)."""
-    # r15: the Arrow twin (bit-identical, parity pytest) — the expr
-    # path's interpreted HOF window hashing was ~7x slower
-    from clinical_vector_search_spark.functions.text import (
-        cdc_chunk_rows_pd,
-    )
+    from clinical_vector_search_spark.functions.text import cdc_chunk_rows
 
-    ch = cdc_chunk_rows_pd(_docs(spark, sf_dir), w=4, divisor=8).select(
+    ch = cdc_chunk_rows(_docs(spark, sf_dir), w=4, divisor=8).select(
         "doc_id", "chunk_hash"
     )
     hot = (
@@ -4945,14 +4935,10 @@ def q_events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (functions/text.py cdc_chunk_rows):
     rolling-hash cut points make chunk identity survive token shifts —
-    the chunk-dedup/caching primitive fixed windows can't provide.
-    r15: served by the Arrow twin cdc_chunk_rows_pd (bit-identical,
-    parity pytest; same SQL oracle)."""
-    from clinical_vector_search_spark.functions.text import (
-        cdc_chunk_rows_pd,
-    )
+    the chunk-dedup/caching primitive fixed windows can't provide."""
+    from clinical_vector_search_spark.functions.text import cdc_chunk_rows
 
-    return cdc_chunk_rows_pd(_docs(spark, sf_dir), w=4, divisor=8)
+    return cdc_chunk_rows(_docs(spark, sf_dir), w=4, divisor=8)
 
 
 def q_events_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

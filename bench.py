@@ -243,7 +243,7 @@ def families(spark, sf_dir: str) -> dict[str, tuple[Callable, Callable | None]]:
     )
     from clinical_vector_search_spark.operators.dedup import (
         minhash_candidate_pairs,
-        simhash_pd,
+        simhash,
     )
     from clinical_vector_search_spark.pipeline.embedding import hash_embed_pd
     from clinical_vector_search_spark.pipeline.modes import (
@@ -300,9 +300,9 @@ def families(spark, sf_dir: str) -> dict[str, tuple[Callable, Callable | None]]:
         return minhash_candidate_pairs(docs, num_hashes=8, rows_per_band=2)
 
     def bench_simhash():
-        # zero-shuffle mapInPandas popcount — parity-tested against the
-        # expression/oracle twin in tests/test_dedup.py
-        return simhash_pd(docs, bits=32)
+        # zero-shuffle mapInPandas popcount (the dedup_simhash entries'
+        # kernel)
+        return simhash(docs, bits=32)
 
     def bench_tumbling():
         return tumbling_agg(read_events(spark, sf_dir), 300)
@@ -311,13 +311,13 @@ def families(spark, sf_dir: str) -> dict[str, tuple[Callable, Callable | None]]:
         return sessionize(read_events(spark, sf_dir), 1800)
 
     def bench_pq_adc():
-        # PQ encode (numpy twin) + ADC top-10 — the compressed-index ANN
-        # path; codes are the only corpus-sized input at query time
+        # PQ encode + ADC top-10 — the compressed-index ANN path; codes
+        # are the only corpus-sized input at query time
         from clinical_vector_search_spark.functions import vector as V
         from clinical_vector_search_spark.operators.pq import (
-            knn_pq_adc_pd,
+            knn_pq_adc,
             pq_codebooks_lcg,
-            pq_encode_pd,
+            pq_encode,
         )
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -328,8 +328,8 @@ def families(spark, sf_dir: str) -> dict[str, tuple[Callable, Callable | None]]:
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
-        codes = pq_encode_pd(emb, books).withColumnRenamed("vec_id", "doc_id")
-        return knn_pq_adc_pd(queries, codes, books, 10)
+        codes = pq_encode(emb, books).withColumnRenamed("vec_id", "doc_id")
+        return knn_pq_adc(queries, codes, books, 10)
 
     def bench_sessionize_skew():
         from clinical_vector_search_spark.streaming.events import (
@@ -383,14 +383,12 @@ def families(spark, sf_dir: str) -> dict[str, tuple[Callable, Callable | None]]:
         return semantic_dedup(emb, dim=64, threshold=0.35, n_clusters=64)
 
     def bench_cdc_chunks():
-        # content-defined chunking: compute-bound interpreted-HOF md5
-        # windows, map-only — fan the single test split across cores
-        # (measured 15s -> 1.0s warm; no combine stage to bloat)
-        from clinical_vector_search_spark.functions.text import (
-            cdc_chunk_rows_pd,
-        )
+        # content-defined chunking: compute-bound md5 windows, map-only —
+        # fan the single test split across cores (no combine stage to
+        # bloat)
+        from clinical_vector_search_spark.functions.text import cdc_chunk_rows
 
-        return cdc_chunk_rows_pd(docs.repartition(cores), w=4, divisor=8)
+        return cdc_chunk_rows(docs.repartition(cores), w=4, divisor=8)
 
     def bench_prep_pipeline():
         # the composed LLM data-prep plan: clean -> lang/quality filter ->
@@ -1122,15 +1120,14 @@ def main() -> None:
                       centroids=coarse8)
         )
         # two-stage refine at its recommended config (tuned trained
-        # codebooks, k_coarse=200, Arrow twins): the exact rescore is
-        # bounded by CANDIDATE recall, so codebook quality and coarse
-        # width both matter — r7's m=8/ksub=16 books managed 0.61; the
-        # tuned books reach 1.0 (accel="pd": the ksub=256 expression
-        # encoder would be 16k interpreted terms per row, 33 s vs ~1 s)
+        # codebooks, k_coarse=200): the exact rescore is bounded by
+        # CANDIDATE recall, so codebook quality and coarse width both
+        # matter — r7's m=8/ksub=16 books managed 0.61; the tuned books
+        # reach 1.0
         from clinical_vector_search_spark.operators.pq import knn_pq_refine
 
         ann_recall["knn_pq_refine_trained"] = recall(
-            knn_pq_refine(qr, v, tbooks, 10, k_coarse=200, accel="pd")
+            knn_pq_refine(qr, v, tbooks, 10, k_coarse=200)
         )
         # floors: a silent recall collapse in any trained path must
         # fail the bench, not just read low in the sidecar

@@ -1,7 +1,9 @@
 """Text-column function library (SURVEY.md §2.2, §2.10 + pipeline extensions).
 
-Everything is built-in Spark SQL expressions (JVM codegen, pushdown-friendly)
-— no Python UDFs. The reference implements clean_text as a row-at-a-time
+Column functions are built-in Spark SQL expressions (JVM codegen,
+pushdown-friendly) — no Python UDFs; the per-doc chunking/fingerprinting
+operators (cdc_chunk_rows, winnowing_fingerprints) are Arrow map-only
+kernels. The reference implements clean_text as a row-at-a-time
 Python UDF (src/pipeline/pipeline.py:50, utils.py:43-48), which is an
 optimization barrier; the built-in regexp pipeline below is semantically
 identical (strip \\r \\n, collapse whitespace runs, trim, null passthrough).
@@ -50,6 +52,21 @@ def tokenize(c: Column | str) -> Column:
     return F.filter(
         F.split(F.lower(F.trim(_col(c))), r"\s+"), lambda t: t != F.lit("")
     )
+
+
+def require_integral_id(df: DataFrame, id_col: str) -> None:
+    """Reject a non-integral ``id_col`` at plan build: the Arrow text
+    kernels (:func:`cdc_chunk_rows`, :func:`winnowing_fingerprints`,
+    ``dedup.simhash``) declare ``{id_col} long`` in their output schema,
+    so any other id type would fail only at execution, inside a task."""
+    from pyspark.sql.types import IntegralType
+
+    dtype = df.schema[id_col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise ValueError(
+            f"id column {id_col!r} must be integral (output schema is "
+            f"'{id_col} long'), got {dtype.simpleString()}"
+        )
 
 
 def shingles(tokens: Column | str, n: int = 3) -> Column:
@@ -645,91 +662,27 @@ def cdc_chunk_rows(
     behind shift-robust dedup): cut the token stream AFTER position
     i + w whenever the hash of the w-token window starting at i is
     ≡ 0 (mod ``divisor``). Returns (id, chunk_seq, chunk_text,
-    chunk_hash, n_tokens).
+    chunk_hash, n_tokens); ``id_col`` must be integral.
 
     Why not fixed windows: inserting one token at the front of a doc
     shifts EVERY fixed-window chunk, so chunk-level dedup/caching misses
     the other 99% unchanged content. CDC boundaries depend only on local
     content — interior chunks keep their identity under shifts (tested),
     which is what makes chunk-hash dedup across near-identical docs
-    work. Expected chunk length ≈ ``divisor`` tokens (+ w tail).
-
-    Pure expressions end-to-end (tokenize → windows → hash-filtered cut
-    set → boundary-pair slices → posexplode): map-side until whatever
-    consumes the chunks; md5 window hashes make it reproducible in SQL.
-    COMPUTE-bound (the md5-in-transform window hashing is interpreted
-    HOF eval, ~15 µs/window): parallelism equals input splits, so
-    repartition a few-split source first — measured 15× on one split
-    fanned over 32 cores, and there is no combine stage to bloat.
-    Docs shorter than ``w + 1`` tokens become one chunk; FastCDC-style
+    work. Expected chunk length ≈ ``divisor`` tokens (+ w tail). Docs
+    shorter than ``w + 1`` tokens become one chunk; FastCDC-style
     min/max chunk clamps are a caller-side post-step if needed.
-    """
-    from clinical_vector_search_spark.functions.hashing import md5_long
 
-    toks = tokenize(text_col)
-    n = F.size(toks)
-    # cut AFTER 1-based token index i+w for each 0-based window start i
-    # whose window hash divides; starts range over 0..n-w
-    gram = lambda i: F.concat_ws(" ", F.slice(toks, i + 1, w))  # noqa: E731
-    cuts = F.when(
-        n >= w,
-        F.filter(
-            F.transform(
-                F.sequence(F.lit(0), n - F.lit(w)),
-                lambda i: F.when(
-                    F.pmod(md5_long(gram(i)), F.lit(divisor)) == 0,
-                    i + F.lit(w),
-                ).otherwise(F.lit(-1)),
-            ),
-            lambda x: x >= 0,
-        ),
-    ).otherwise(F.array().cast("array<int>"))
-    bounds = F.array_distinct(
-        F.concat(F.array(F.lit(0)), cuts, F.array(n))
-    )
-    pairs = F.zip_with(
-        F.slice(bounds, 1, F.size(bounds) - 1),
-        F.slice(bounds, 2, F.size(bounds) - 1),
-        lambda a, b: F.concat_ws(" ", F.slice(toks, a + 1, b - a)),
-    )
-    out = df.select(
-        F.col(id_col),
-        F.posexplode(F.when(n > 0, pairs).otherwise(F.array().cast(
-            "array<string>"
-        ))).alias("chunk_seq", "chunk_text"),
-    )
-    return out.select(
-        id_col,
-        "chunk_seq",
-        "chunk_text",
-        md5_long("chunk_text").alias("chunk_hash"),
-        F.size(tokenize("chunk_text")).alias("n_tokens"),
-    )
-
-
-def cdc_chunk_rows_pd(
-    df: DataFrame,
-    w: int = 4,
-    divisor: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Arrow/NumPy throughput twin of :func:`cdc_chunk_rows` — same
-    contract, bit-identical output (parity pinned by
-    tests/test_text.py::test_cdc_chunk_rows_pd_parity over every test
-    sf). The expression path's window hashing is interpreted HOF eval
-    (~15 µs/window, CodegenFallback); here each task tokenizes and
-    hashes its batch in plain Python/hashlib (~1 µs/window), which is
-    what a compute-bound map-only chunker should pay (guide §4.2).
-    Same parallelism note as the expression twin: fan a few-split
-    source across cores first. Assumes a BIGINT ``id_col`` (the repo's
-    doc-id convention); use the expression twin for exotic id types.
-    Also assumes Python ``str.lower()`` matches the JVM ``lower()``:
-    they agree on ASCII and the common full-case mappings (U+0130,
-    final sigma, ß — pinned by the parity test's non-ASCII case), but
+    Map-only Arrow kernel: each task tokenizes (:func:`tokenize`'s
+    rule) and md5-hashes its batch in plain Python/hashlib (~1 µs per
+    window — the interpreted-HOF expression form paid ~15 µs), so the
+    chunker is COMPUTE-bound with parallelism equal to input splits:
+    fan a few-split source across cores first (guide §4.2). Python
+    ``str.lower()`` stands in for the JVM ``lower()``; they agree on
+    ASCII and the common full-case mappings (U+0130, final sigma, ß —
+    pinned against :func:`tokenize` in tests/test_text.py), but
     locale-independent case mappings have differed across runtime
-    versions — non-ASCII corpora should pin parity on their own data
-    before switching twins."""
+    versions, so non-ASCII corpora should pin that on their own data."""
     import hashlib
     import re
     from typing import Iterator
@@ -737,6 +690,7 @@ def cdc_chunk_rows_pd(
     import pandas as pd
     from pyspark.sql import types as T
 
+    require_integral_id(df, id_col)
     # JVM \\s is ASCII-only; mirror it exactly (re.ASCII)
     ws = re.compile(r"\s+", re.ASCII)
 
@@ -1059,97 +1013,22 @@ def winnowing_fingerprints(
     expected density of 2/(w+1) — position-robust local sampling, unlike
     a fixed stride.
 
-    The sequential "rightmost minimum per window" rule is run as ONE
-    window-min by packing (hash, position) into a single BIGINT key:
+    Each (hash, position) packs into one key
         key = hash·2^21 + (2^21 − 1 − pos)
     so the numeric minimum is exactly (min hash, max pos). hash < 2^31
     (md5-derived), pos < 2^21 → key < 2^52, exact in int64 on any
     engine. Docs with fewer than w k-grams contribute their global
     minimum (one fingerprint) instead of vanishing.
 
-    Scale shape: posexplode + lead() k-gram assembly (whole-stage
-    codegen, same as shingle_rows), two window passes over the SAME
-    (id, pos) ordering — one shuffle total — then a distinct at
-    fingerprint granularity. No UDFs, no driver state.
+    Map-only Arrow kernel with ZERO shuffles: each task tokenizes
+    (:func:`tokenize`'s rule), hashes (hashlib, ~1 µs/gram) and selects
+    fingerprints with a monotonic-deque sliding minimum in O(n) per
+    doc; parallelism = input splits, so fan a few-split source across
+    cores first, exactly like :func:`cdc_chunk_rows` (same Python
+    ``str.lower()`` ↔ JVM ``lower()`` caveat as there).
 
     Output: (id_col, fp_pos, fp_hash) — distinct selected fingerprints;
-    fp_pos is the 0-based k-gram index.
-    """
-    from clinical_vector_search_spark.functions.hashing import md5_long
-
-    POSCAP = 1 << 21
-    toks = df.select(
-        F.col(id_col), F.posexplode(tokenize(text_col)).alias("pos", "tok")
-    )
-    wl = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(wl) for j in range(1, k)]
-    grams = (
-        toks.select(
-            F.col(id_col),
-            F.col("pos"),
-            F.concat_ws(" ", *parts).alias("gram"),
-            parts[-1].alias("_last"),
-        )
-        .filter(F.col("_last").isNotNull() & (F.col("pos") < POSCAP))
-        .select(
-            id_col,
-            "pos",
-            (md5_long(F.col("gram")) % F.lit(1 << 31)).alias("khash"),
-        )
-    )
-    key = F.col("khash") * POSCAP + (F.lit(POSCAP - 1) - F.col("pos"))
-    wf = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
-    wp = Window.partitionBy(id_col)
-    windowed = grams.select(
-        F.col(id_col),
-        F.min(key).over(wf).alias("_wmin"),
-        F.count("*").over(wf).alias("_cnt"),
-        F.count("*").over(wp).alias("_n"),
-        "pos",
-    )
-    sel = windowed.filter(
-        (F.col("_cnt") == w) | ((F.col("pos") == 0) & (F.col("_n") < w))
-    )
-    # POSCAP is 2^21, so unpack with exact integer bit ops (shift/mask),
-    # never float division
-    return sel.select(
-        F.col(id_col),
-        (
-            F.lit(POSCAP - 1) - F.col("_wmin").bitwiseAND(F.lit(POSCAP - 1))
-        ).alias("fp_pos"),
-        F.shiftright(F.col("_wmin"), 21).alias("fp_hash"),
-    ).distinct()
-
-
-def winnowing_fingerprints_pd(
-    df: DataFrame,
-    k: int = 3,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Arrow/mapInPandas throughput twin of
-    :func:`winnowing_fingerprints` — same contract, bit-identical output
-    (parity pinned by tests/test_text.py::test_winnowing_pd_parity over
-    every test sf, including the per-column dtypes). The expression
-    path's per-k-gram md5 runs through conv()/substring string
-    machinery per window row plus a doc-key exchange + two window sorts
-    just to phrase "rightmost min per sliding window"; here each task
-    tokenizes, hashes (hashlib, ~1 µs/gram) and selects fingerprints
-    with a monotonic-deque sliding minimum in O(n) per doc — the
-    map-only plan a per-doc fingerprint function should have
-    (guide §4.2): ZERO shuffles (the expression twin pays one doc-key
-    exchange), parallelism = input splits, so fan a few-split source
-    across cores first, exactly like :func:`cdc_chunk_rows_pd`.
-
-    Same parity caveats as the cdc twin, documented not theoretical:
-    a BIGINT ``id_col`` (the repo's doc-id convention — use the
-    expression twin for exotic id types), and Python ``str.lower()``
-    standing in for the JVM ``lower()``; the two agree on ASCII and on
-    the common Unicode plane but differ on a few locale-independent
-    full-case mappings (e.g. U+0130 İ), so non-ASCII corpora should
-    pin parity on their own data before switching twins (the parity
-    test includes a non-ASCII case)."""
+    fp_pos is the 0-based k-gram index. ``id_col`` must be integral."""
     import hashlib
     import re
     from collections import deque
@@ -1160,6 +1039,7 @@ def winnowing_fingerprints_pd(
 
     POSCAP = 1 << 21
     MASK31 = (1 << 31) - 1  # % 2^31 == & (2^31 - 1) on non-negatives
+    require_integral_id(df, id_col)
     # JVM \\s is ASCII-only; mirror it exactly (re.ASCII)
     ws = re.compile(r"\s+", re.ASCII)
 

@@ -3,8 +3,7 @@
 All operators work on ``ArrayType(FloatType/DoubleType)`` columns using Spark
 higher-order functions — pure JVM expressions, no Python in the hot path, so
 Catalyst/Tungsten codegen applies and the ops scale with the data, not the
-driver. A pandas-UDF fast path is provided for batch jobs where Arrow-batched
-NumPy beats expression evaluation (wide matmuls).
+driver.
 
 Reference parity notes (file:line cites into /root/reference):
   * L2 normalize keeps the reference's ``+1e-9`` epsilon
@@ -25,9 +24,6 @@ Reference parity notes (file:line cites into /root/reference):
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -226,8 +222,7 @@ def add_noise(
     The reference draws np.random.normal(0, sigma) UNSEEDED
     (pipeline_mode.py:78-80) — untestable. We key an LCG on
     (row_id*dim + i) instead: same privacy intent (bounded perturbation),
-    fully reproducible, SQL-expressible. A seeded-Gaussian pandas-UDF
-    variant is in :func:`add_gaussian_noise_pd` for reference-exact shape.
+    fully reproducible, SQL-expressible.
     """
     vec, row_id = _col(vec), _col(row_id)
     return F.transform(
@@ -250,8 +245,7 @@ def proj_weight(i: Column, j: Column, out_dim: int) -> Column:
 def random_projection(vec: Column | str, in_dim: int, out_dim: int) -> Column:
     """V8: out[j] = Σ_i vec[i] * R[i][j] — dimensionality reduction before
     the expensive (FHE) stage, as pipeline_mode.py:139-148 but with a
-    deterministic matrix. Pure SQL expression; for very wide matmuls use
-    :func:`random_projection_pd`."""
+    deterministic matrix. Pure SQL expression."""
     vec = _col(vec)
     return F.transform(
         F.sequence(F.lit(0), F.lit(out_dim - 1)),
@@ -306,82 +300,6 @@ def hyperplane_sign_bucket(vec: Column | str, dim: int, n_planes: int) -> Column
             plane_dot(p) >= 0, F.pow(F.lit(2.0), p).cast("long")
         ).otherwise(F.lit(0).cast("long")),
     )
-
-
-# ---------------------------------------------------------------------------
-# pandas-UDF fast paths (Arrow-batched NumPy) — for batch index-build jobs
-# where a wide matmul beats per-element expressions. Not used by the
-# oracle-checked queries (NumPy SIMD reassociates float sums).
-# ---------------------------------------------------------------------------
-
-
-def normalize_pd_iter(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    import numpy as np
-
-    for s in batches:
-        mat = np.array(s.tolist(), dtype="float64")
-        norms = np.linalg.norm(mat, axis=1, keepdims=True) + EPS
-        yield pd.Series(list(mat / norms))
-
-
-def _proj_matrix_np(in_dim: int, out_dim: int):
-    """NumPy twin of :func:`proj_weight`: the full R[in_dim, out_dim] matrix
-    from the same LCG, bit-identical to the expression path (all math in
-    int64, indices < 2^31 so no reduction differences)."""
-    import numpy as np
-
-    idx = (
-        np.arange(in_dim, dtype="int64")[:, None] * out_dim
-        + np.arange(out_dim, dtype="int64")[None, :]
-    ) % LCG_M
-    x = (PROJ_A * idx + PROJ_C) % LCG_M
-    return x.astype("float64") / float(LCG_M) - 0.5
-
-
-def random_projection_pd(
-    df, vec_col: str, id_col: str, in_dim: int, out_dim: int, out_col: str = "proj_vec"
-):
-    """V8 fast path: one NumPy matmul per Arrow batch via mapInPandas —
-    same deterministic matrix as :func:`random_projection`, for wide
-    matmuls where the per-element expression tree is too slow. Returns
-    (id_col, out_col) rows."""
-    import numpy as np
-
-    R = _proj_matrix_np(in_dim, out_dim)  # in x out, built once, ships in closure
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype="float64")
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), out_col: list(mat @ R)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        fn, f"{id_col} long, {out_col} array<double>"
-    )
-
-
-def add_gaussian_noise_pd(df, vec_col: str, id_col: str, sigma: float, seed: int):
-    """Reference-shaped DP noise (np.random.normal) but seeded per row id —
-    hardened version of pipeline_mode.py:78-80 / embedding.py:44-51.
-    Runs as mapInPandas so each Arrow batch is perturbed vectorized."""
-    import numpy as np
-
-    out_schema = df.schema
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mats = np.array(pdf[vec_col].tolist(), dtype="float64")
-            for r in range(len(pdf)):
-                rng = np.random.default_rng(seed + int(pdf[id_col].iloc[r]))
-                mats[r] += rng.normal(0.0, sigma, mats.shape[1])
-            norms = np.linalg.norm(mats, axis=1, keepdims=True) + EPS
-            pdf[vec_col] = list(mats / norms)
-            yield pdf
-
-    return df.mapInPandas(fn, out_schema)
 
 
 def mean_pool(

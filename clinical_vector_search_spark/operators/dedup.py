@@ -645,31 +645,65 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Per-doc SimHash: bit j of the hash = 1 iff Σ_tokens (±1 for token's
-    md5 bit j) > 0. Returns (doc_id, simhash long).
+    """Per-doc SimHash: bit j of the hash = 1 iff Σ_tokens (±1 for the
+    token's md5 bit j) > 0, i.e. strictly more than half the tokens
+    (multiset — repeated tokens count repeatedly) have md5 bit j set.
+    Tokens are :func:`functions.text.tokenize`'s (lowercase, split on
+    ASCII whitespace); docs with zero tokens drop out. Returns
+    (id_col, simhash long); ``id_col`` must be integral.
 
-    Implemented as one aggregation per doc over token-hash longs with the
-    per-bit popcount unrolled at plan-build time (bits is small and fixed).
-    Unweighted tokens (multiset — repeated tokens count repeatedly)."""
-    toks = df.select(
-        F.col(id_col), F.explode(TXT.tokenize(text_col)).alias("tok")
-    ).withColumn("hv", H.md5_long(F.col("tok")))
-    per_bit = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("hv"), j).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"b{j}")
-            for j in range(bits)
-        ]
-    )
-    sim = F.lit(0).cast("long")
-    for j in range(bits):
-        sim = sim + F.when(
-            F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)
-        ).otherwise(F.lit(0).cast("long"))
-    return per_bit.select(F.col(id_col), sim.alias("simhash"))
+    One Arrow batch stage with ZERO shuffle — each doc's tokens live in
+    its own row, so the operator is embarrassingly parallel, and the
+    popcount is a vectorized numpy bit-unpack. Token hashes are memoized
+    per batch (vocabulary ≪ token count), so the Python md5 cost is per
+    distinct token, not per occurrence. Measured ~4× faster at sf0.1
+    than exploding tokens to rows and shuffling them on ``id_col``."""
+    out_schema = f"{id_col} long, simhash long"
+    if bits > 62:  # bit 63 would overflow the signed long output
+        raise ValueError("simhash supports at most 62 bits")
+    TXT.require_integral_id(df, id_col)
+
+    def kernel(batches):
+        import hashlib
+        import re
+
+        import numpy as np
+        import pandas as pd
+
+        # Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); re.ASCII matches it
+        splitter = re.compile(r"\s+", re.ASCII)
+        shifts = np.arange(bits, dtype=np.uint64)
+        vocab: dict[str, int] = {}
+
+        def hv(tok: str) -> int:
+            v = vocab.get(tok)
+            if v is None:
+                # parity with functions.hashing.md5_long: first 15 hex chars
+                v = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
+                vocab[tok] = v
+            return v
+
+        for pdf in batches:
+            ids, sketches = [], []
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                toks = [
+                    t for t in splitter.split((text or "").lower()) if t
+                ]
+                if not toks:
+                    continue
+                h = np.fromiter(
+                    (hv(t) for t in toks), dtype=np.uint64, count=len(toks)
+                )
+                ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+                bitset = (2 * ones > len(toks)).astype(np.uint64)
+                ids.append(doc_id)
+                sketches.append(int((bitset << shifts).sum()))
+            yield pd.DataFrame(
+                {id_col: pd.Series(ids, dtype="int64"),
+                 "simhash": pd.Series(sketches, dtype="int64")}
+            )
+
+    return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
 
 
 def dedup_groups(
@@ -984,73 +1018,6 @@ def dedup_groups_star(
             F.coalesce("group_id", F.col(id_col)).alias("group_id"),
         )
     )
-
-
-def simhash_pd(
-    df: DataFrame,
-    bits: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """mapInPandas twin of :func:`simhash` — the scale/bench path.
-
-    Same contract bit-for-bit (parity-tested in tests/test_dedup.py): docs
-    with zero tokens drop out, bit j of the sketch = 1 iff strictly more
-    than half the tokens (multiset) have md5 bit j set.
-
-    Why this beats the expression path: :func:`simhash` explodes to one row
-    per token, shuffles them on ``id_col``, and evaluates ``bits``
-    conditional sums per token row. Here the whole doc→sketch computation
-    is ONE Arrow batch stage with ZERO shuffle — each doc's tokens live in
-    its own row, so the operator is embarrassingly parallel, and the
-    popcount is a vectorized numpy bit-unpack. Token hashes are memoized
-    per-batch (vocabulary ≪ token count), so the Python md5 cost is per
-    distinct token, not per occurrence. Measured ~4× at sf0.1."""
-    out_schema = f"{id_col} long, simhash long"
-    if bits > 62:  # bit 63 would overflow the signed long output
-        raise ValueError("simhash_pd supports at most 62 bits")
-
-    def kernel(batches):
-        import hashlib
-        import re
-
-        import numpy as np
-        import pandas as pd
-
-        # Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); re.ASCII matches it
-        splitter = re.compile(r"\s+", re.ASCII)
-        shifts = np.arange(bits, dtype=np.uint64)
-        vocab: dict[str, int] = {}
-
-        def hv(tok: str) -> int:
-            v = vocab.get(tok)
-            if v is None:
-                # parity with functions.hashing.md5_long: first 15 hex chars
-                v = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
-                vocab[tok] = v
-            return v
-
-        for pdf in batches:
-            ids, sketches = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [
-                    t for t in splitter.split((text or "").lower()) if t
-                ]
-                if not toks:  # expression path: no token rows -> doc absent
-                    continue
-                h = np.fromiter(
-                    (hv(t) for t in toks), dtype=np.uint64, count=len(toks)
-                )
-                ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-                bitset = (2 * ones > len(toks)).astype(np.uint64)
-                ids.append(doc_id)
-                sketches.append(int((bitset << shifts).sum()))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
-                 "simhash": pd.Series(sketches, dtype="int64")}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
 
 
 def embedding_neardup_pairs(

@@ -10,9 +10,9 @@ thousand — a driver-side eigendecomposition is exactly how Spark MLlib's
 own PCA works for small feature counts). The same map-side-combine shape
 as k-means training (operators/knn.py:211-269).
 
-Transform is a projection onto the fitted components: expression path
-(literal component matrix, oracle-friendly) and an Arrow-batched NumPy
-twin — parity-tested in tests/test_pca.py.
+Transform is a projection onto the fitted components as JVM expressions
+(literal component matrix, oracle-friendly), checked against NumPy in
+tests/test_pca.py.
 """
 
 from __future__ import annotations
@@ -107,29 +107,3 @@ def pca_transform(
     )
     return df.withColumn(out_col, proj)
 
-
-def pca_transform_pd(
-    df: DataFrame,
-    model: dict,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "pca_vec",
-) -> DataFrame:
-    """NumPy twin of :func:`pca_transform` (Arrow-batched matmul) — the
-    throughput path; parity asserted in tests/test_pca.py."""
-    import numpy as np
-
-    W = np.array(model["components"], dtype="float64")  # (k, dim)
-    mu = np.array(model["mean"], dtype="float64")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype="float64")
-            out = (mat - mu) @ W.T
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: list(out)})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        fn, f"{id_col} long, {out_col} array<double>"
-    )

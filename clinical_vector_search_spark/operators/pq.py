@@ -20,9 +20,10 @@ Codebooks:
     partial rows (the kmeans_centroids shape, knn.py:211-269). Train on a
     hash-sampled subset at scale, exactly like FAISS trains its quantizer.
 
-Encoders: :func:`pq_encode` (pure expressions — the oracle twin) and
-:func:`pq_encode_pd` (Arrow-batched NumPy argmin — the throughput twin);
-parity is asserted in tests/test_pq.py.
+:func:`pq_encode` and :func:`knn_pq_adc` are Arrow-batched NumPy
+kernels; both are hash-checked against the DuckDB oracle
+(``vec_pq_codes`` / ``knn_pq_adc`` entries) and against a plain-Python
+reference in tests/test_pq.py.
 """
 
 from __future__ import annotations
@@ -53,8 +54,8 @@ def _sumsq_lr(diff, axis: int):
     np.sum uses pairwise (tree) summation, which can differ from the
     sequential fold of F.aggregate / DuckDB list_sum by an ulp — enough in
     principle to flip a round(,6) value or an argmin on a near-tie. The
-    expression path and the oracle both fold d-order left-to-right, so the
-    numpy twins must too (ADVICE r4)."""
+    SQL oracle and the expression encoder (:func:`ivfpq_encode`) fold
+    d-order left-to-right, so the NumPy kernels must too (ADVICE r4)."""
     import numpy as np
 
     sq = np.moveaxis(diff * diff, axis, -1)
@@ -173,7 +174,7 @@ def _subspace_dists(vec: str, books: list, sub: int) -> F.Column:
     """Array of ksub squared-L2 distances from vec's sub-th segment to the
     sub-th codebook — d-order summation matches the SQL oracle. Only the
     sub-th codebook slice enters the plan as a literal (embedding the full
-    m×ksub×dsub table per call would bloat every pq_encode plan m-fold)."""
+    m×ksub×dsub table per call would bloat every ivfpq_encode plan m-fold)."""
     dsub = len(books[0][0])
     v = F.col(vec)
     cb = lit_double_matrix(books[sub])
@@ -202,27 +203,9 @@ def pq_encode(
     vec_col: str = "embedding",
     out_col: str = "codes",
 ) -> DataFrame:
-    """Expression-path encoder: codes[sub] = argmin_k ||segment - c_k||²
-    (first-min ties, matching SQL list_indexof). Returns (id, codes)."""
-    m = len(books)
-    code_cols = []
-    for sub in range(m):
-        dists = _subspace_dists(vec_col, books, sub)
-        code_cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    return df.select(F.col(id_col), F.array(*code_cols).alias(out_col))
-
-
-def pq_encode_pd(
-    df: DataFrame,
-    books: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "codes",
-) -> DataFrame:
-    """NumPy twin of :func:`pq_encode` (Arrow-batched, BLAS argmin) — the
-    throughput path; identical codes asserted in tests/test_pq.py."""
+    """PQ encoder: codes[sub] = argmin_k ||segment - c_k||² (first-min
+    ties, matching SQL list_indexof; d-order summation, see
+    :func:`_sumsq_lr`). Arrow-batched NumPy argmin. Returns (id, codes)."""
     import numpy as np
 
     B = np.array(books, dtype="float64")  # (m, ksub, dsub)
@@ -245,6 +228,22 @@ def pq_encode_pd(
     )
 
 
+def _collect_queries(
+    queries: DataFrame, query_id: str, query_vec: str, caller: str
+) -> list:
+    """Collect the query side to the driver (one job) to build ADC
+    tables. ``limit`` BEFORE ``collect`` so an oversized query frame is
+    detected with bounded driver memory instead of OOM-ing the collect
+    the guard exists to prevent (same discipline as _knn_partial_topk)."""
+    qrows = queries.select(query_id, query_vec).limit(100_001).collect()
+    if len(qrows) > 100_000:
+        raise ValueError(
+            f"{caller} collects the query side (>100000 rows) "
+            "to build ADC tables; pre-reduce the query set or shard it"
+        )
+    return qrows
+
+
 def knn_pq_adc(
     queries: DataFrame,
     codes: DataFrame,
@@ -255,62 +254,31 @@ def knn_pq_adc(
     doc_id: str = "doc_id",
     code_col: str = "codes",
 ) -> DataFrame:
-    """ADC top-k: per query build the m×ksub distance table IN-PLAN (tiny,
-    from the literal codebooks), broadcast-join it to the codes table, and
-    score each doc with m table lookups — never touching raw doc vectors.
-    Returns (query_id, rank, doc_id, adc_dist) ascending, ties by doc id.
+    """ADC top-k: score each doc with ``m`` table lookups into a per-query
+    m×ksub distance table — never touching raw doc vectors. Returns
+    (query_id, rank, doc_id, adc_dist) ascending, ties by doc id.
 
-    At 100 TB the codes table is the only corpus-sized input (≈128× smaller
-    than the vectors); the query side is a broadcast. Approximation error
-    is the quantization error — recall vs exact kNN rises with
-    trained codebooks (tests/test_pq.py)."""
-    m = len(books)
-    tables = F.array(
-        *[_subspace_dists(query_vec, books, sub) for sub in range(m)]
-    ).alias("_tab")
-    q = queries.select(query_id, tables)
-    pairs = codes.join(F.broadcast(q), how="cross")
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, sub: acc
-        + F.element_at(
-            F.element_at("_tab", sub.cast("int") + 1),
-            F.element_at(F.col(code_col), sub.cast("int") + 1) + 1,
-        ),
-    )
-    scored = pairs.select(query_id, doc_id, dist.alias("adc_dist"))
-    return _ranked_asc(scored, query_id, doc_id, k, "adc_dist")
-
-
-def knn_pq_adc_pd(
-    queries: DataFrame,
-    codes: DataFrame,
-    books: list,
-    k: int,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    doc_id: str = "doc_id",
-    code_col: str = "codes",
-) -> DataFrame:
-    """NumPy twin of :func:`knn_pq_adc` (parity-tested): the bounded query
-    batch collects to the driver, per-query distance tables broadcast into
-    a mapInPandas kernel that scores whole Arrow batches with vectorized
-    table lookups and emits only its per-partition top-k per query
-    (deterministic (dist, doc_id) lexsort); a final window over the
-    partitions × Q × k survivors picks the global top-k. This is the
-    partial_topk shape (operators/knn.py:62-91) — the corpus-sized codes
-    table is read once, map-side, and only tiny candidate sets shuffle."""
+    The bounded query batch (at most 100 000 rows, else ``ValueError``)
+    collects to the driver; its distance tables ship into a mapInPandas
+    kernel that scores whole Arrow batches with vectorized lookups and
+    emits only its per-partition top-k per query (deterministic
+    (dist, doc_id) lexsort); a final window over the partitions × Q × k
+    survivors picks the global top-k. This is the partial_topk shape
+    (operators/knn.py:62-91): the corpus-sized codes table (≈128×
+    smaller than the vectors at 100 TB) is read once, map-side, and only
+    tiny candidate sets shuffle. Approximation error is the quantization
+    error — recall vs exact kNN rises with trained codebooks
+    (tests/test_pq.py)."""
     import numpy as np
 
     B = np.array(books, dtype="float64")
     m, _ksub, dsub = B.shape
-    qrows = queries.select(query_id, query_vec).collect()
+    qrows = _collect_queries(queries, query_id, query_vec, "knn_pq_adc")
     qids = [r[0] for r in qrows]
     Q = np.array([list(r[1]) for r in qrows], dtype="float64")
     segs = Q.reshape(len(Q), m, dsub)
-    # tables[q, sub, k] — left-to-right d-order fold matches the
-    # expression path exactly (see _sumsq_lr)
+    # tables[q, sub, k] — left-to-right d-order fold matches the SQL
+    # oracle exactly (see _sumsq_lr)
     tabs = _sumsq_lr(segs[:, :, None, :] - B[None], -1)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -452,15 +420,7 @@ def knn_ivfpq_codes(
     # (bounded query batch) and score the cell-joined codes in numpy.
     # residual=False: one table per query; residual=True: one per
     # (query, cell) over (q − centroid) — both driver-tiny.
-    # limit BEFORE collect so an oversized query frame is detected with
-    # bounded driver memory instead of OOM-ing the collect the guard
-    # exists to prevent (same discipline as _knn_partial_topk)
-    qrows = queries.select(query_id, query_vec).limit(100_001).collect()
-    if len(qrows) > 100_000:
-        raise ValueError(
-            "knn_ivfpq_codes collects the query side (>100000 rows) "
-            "to build ADC tables; pre-reduce the query set or shard it"
-        )
+    qrows = _collect_queries(queries, query_id, query_vec, "knn_ivfpq_codes")
     qids = {r[0]: i for i, r in enumerate(qrows)}
     Q = np.array([list(r[1]) for r in qrows], dtype="float64")
     if residual:
@@ -771,7 +731,6 @@ def knn_pq_refine(
     query_vec: str = "query_vec",
     doc_id: str = "doc_id",
     vec_col: str = "embedding",
-    accel: str = "expr",
 ) -> DataFrame:
     """Two-stage compressed search (the FAISS IndexRefineFlat
     architecture, generalizing reference pipeline.py:126-136's
@@ -789,27 +748,15 @@ def knn_pq_refine(
     inside the candidate set — tests assert both), and the result is
     EXACT whenever the true top-k survives the coarse cut.
 
-    ``accel``: "expr" (default) runs encode + ADC as pure expressions —
-    the oracle-parity path, fine at small ksub; "pd" swaps in the
-    bit-parity NumPy twins (:func:`pq_encode_pd` / :func:`knn_pq_adc_pd`)
-    — at the recall-tuned m=16/ksub=256 configuration the expression
-    encoder is O(m·ksub·dsub) interpreted work PER ROW (16k terms) and
-    measures 33 s where the Arrow path takes ~2 s at sf0.1; same codes,
-    same candidates (twin parity tests in tests/test_pq.py).
-
     Returns (query_id, rank, doc_id, l2_dist ascending, ties by doc id).
     """
     from clinical_vector_search_spark.functions import vector as V
 
-    if accel not in ("expr", "pd"):
-        raise ValueError(f"unknown accel: {accel!r}")
-    enc = pq_encode if accel == "expr" else pq_encode_pd
-    adc = knn_pq_adc if accel == "expr" else knn_pq_adc_pd
-    codes = enc(
+    codes = pq_encode(
         docs.select(F.col(doc_id), F.col(vec_col)), books,
         id_col=doc_id, vec_col=vec_col,
     )
-    cand = adc(
+    cand = knn_pq_adc(
         queries, codes, books, k_coarse,
         query_id=query_id, query_vec=query_vec, doc_id=doc_id,
     ).select(query_id, doc_id)

@@ -7,56 +7,18 @@ Query build: 0.7*query_vec ⊕ 0.3*zeros (pipeline_mode.py:97-102).
 Noise-quality metric A7: mean cosine(attr, noisy_attr)
 (pipeline_mode.py:112-113).
 
-All vector math is JVM expressions (functions.vector); noise is the
-deterministic LCG perturbation — the one place we deliberately diverge from
-the reference (its np.random.normal at pipeline_mode.py:79 is unseeded and
-therefore untestable; SURVEY.md §7c).
+The index build is one Arrow-batched NumPy stage; the query side is JVM
+expressions (functions.vector). Noise is the deterministic LCG
+perturbation of :func:`functions.vector.add_noise` — the one place we
+deliberately diverge from the reference (its np.random.normal at
+pipeline_mode.py:79 is unseeded and therefore untestable; SURVEY.md §7c).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from clinical_vector_search_spark.functions import vector as V
-
-
-def build_dp_index(
-    df: DataFrame,
-    text_vec: str,
-    attr_vec: str,
-    id_col: str,
-    sigma: float = 0.15,
-    dim: int | None = None,
-    w_text: float = 0.7,
-    w_attr: float = 0.3,
-) -> DataFrame:
-    """Add ``dp_vec`` (unit-norm, dim_text+dim_attr) and ``noise_cosine``
-    (per-row A7 quality) columns.
-
-    Matches reference order of operations (pipeline_mode.py:78-86): the
-    attribute vector is NORMALIZED first, noise is added to the normalized
-    vector, and ``noise_cosine`` compares normalized-vs-noisy — so the
-    noise-to-signal ratio has reference semantics even for unnormalized
-    encoder outputs. Pass ``dim`` explicitly to keep plan construction
-    lazy (the fallback runs a small Spark job to sniff it).
-    """
-    if dim is None:
-        dim = len(df.select(attr_vec).first()[0])
-    out = df.withColumn("_attr_n", V.l2_normalize(attr_vec))
-    out = out.withColumn(
-        "_noisy_attr", V.add_noise("_attr_n", id_col, sigma, dim)
-    )
-    out = out.withColumn("noise_cosine", V.cosine("_attr_n", "_noisy_attr"))
-    dp = V.weighted_concat(
-        V.l2_normalize(text_vec), V.l2_normalize("_noisy_attr"), w_text, w_attr
-    )
-    out = (
-        out.withColumn("dp_vec", V.l2_normalize(dp))
-        .drop("_noisy_attr")
-        .drop("_attr_n")
-    )
-    return out
 
 
 def build_dp_index_pd(
@@ -68,14 +30,21 @@ def build_dp_index_pd(
     w_text: float = 0.7,
     w_attr: float = 0.3,
 ) -> DataFrame:
-    """mapInPandas twin of :func:`build_dp_index` — the batch/scale path.
+    """Return (id_col, dp_vec, noise_cosine): ``dp_vec`` is the unit-norm
+    dim_text+dim_attr DP index vector, ``noise_cosine`` the per-row A7
+    quality.
 
-    One Arrow-batched numpy stage replaces the five chained higher-order
-    expressions (normalize → noise → cosine → concat → normalize), all of
-    which are CodegenFallback (interpreted per element). The LCG noise is
-    exact int64 math, bit-identical to :func:`functions.vector.add_noise`;
-    the float stages differ only in summation order (last-ulp), which the
-    parity test bounds. Returns (id_col, dp_vec, noise_cosine)."""
+    Matches reference order of operations (pipeline_mode.py:78-86): the
+    attribute vector is NORMALIZED first, noise is added to the normalized
+    vector, and ``noise_cosine`` compares normalized-vs-noisy — so the
+    noise-to-signal ratio has reference semantics even for unnormalized
+    encoder outputs. One Arrow-batched numpy stage runs normalize → noise
+    → cosine → concat → normalize (as chained higher-order expressions
+    all five are CodegenFallback, interpreted per element). The LCG noise
+    is exact int64 math, bit-identical to
+    :func:`functions.vector.add_noise`; the float stages match the
+    expression composition to summation order (last ulp), which
+    tests/test_pipeline.py bounds."""
     from clinical_vector_search_spark.functions.vector import (
         EPS,
         LCG_A,

@@ -76,8 +76,7 @@ def evaluation_metrics(
     n_queries: int = 5,
 ) -> DataFrame:
     """The deterministic metric half of :func:`run_evaluation`: per-query
-    A1–A5 for the SQL-expressible modes (DP expression path, FHE plaintext
-    stand-in) against the exact-kNN baseline oracle — one fully lazy plan,
+    A1–A5 for the SQL-expressible modes (DP, FHE plaintext stand-in) against the exact-kNN baseline oracle — one fully lazy plan,
     no wall-clock columns, so the whole table is DuckDB-oracle-checkable.
     Latency (A8/A9) stays in :func:`run_evaluation`, which is rows-only
     checked by design (wall-clock is nondeterministic)."""
@@ -93,7 +92,7 @@ def evaluation_metrics(
     base = _ids(baseline_mode(spark, sf_dir, k, n_queries))
     out: DataFrame | None = None
     for mode, res in (
-        ("dp", _ids(dp_mode(spark, sf_dir, k, n_queries, accel="expr"))),
+        ("dp", _ids(dp_mode(spark, sf_dir, k, n_queries))),
         ("fhe", _ids(fhe_mode(spark, sf_dir, k, n_queries))),
     ):
         m = evaluate_against_baseline(base, res, k).select(

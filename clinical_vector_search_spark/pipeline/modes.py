@@ -18,11 +18,7 @@ from clinical_vector_search_spark.functions import text as TXT
 from clinical_vector_search_spark.functions import vector as V
 from clinical_vector_search_spark.io.tables import read_table
 from clinical_vector_search_spark.operators.knn import knn
-from clinical_vector_search_spark.pipeline.dp import (
-    build_dp_index,
-    build_dp_index_pd,
-    dp_query_vec,
-)
+from clinical_vector_search_spark.pipeline.dp import build_dp_index_pd, dp_query_vec
 from clinical_vector_search_spark.pipeline.embedding import hash_embed, hash_embed_pd
 from clinical_vector_search_spark.pipeline.rag import rag_pipeline
 from clinical_vector_search_spark.plan_cache import (
@@ -173,27 +169,22 @@ def dp_mode(
     n_queries: int = 10,
     sigma: float = 0.15,
     attr_dim: int = 64,
-    accel: str = "pd",
 ) -> DataFrame:
     """DP mode (pipeline_mode.py:56-113): attribute sentence → hash-embed →
     noised 0.3-weighted concat with 0.7-weighted text vec → kNN with
     zero-padded queries.
 
-    ``accel="pd"`` (default, the batch/scale path) runs the embed and
-    index-build stages as Arrow-batched numpy kernels — the reference's own
-    model-per-executor shape (embedding.py:31-41). ``accel="expr"`` uses
-    the pure-expression twins (the DuckDB-oracle-aligned path; same LCG
-    noise bit-for-bit, float sums may differ in the last ulp). Top-k id
-    parity between the two is asserted in tests/test_pipeline.py.
-    Returns a prepared plan (see _PLAN_CACHE)."""
+    The embed and index-build stages are Arrow-batched numpy kernels —
+    the reference's own model-per-executor shape (embedding.py:31-41);
+    the ``evaluation_metrics`` entry hash-checks the top-k against the
+    DuckDB oracle. Returns a prepared plan (see _PLAN_CACHE)."""
 
     def build() -> DataFrame:
         docs, vecs = load_corpus(spark, sf_dir)
         attrs = docs.select(
             "doc_id", TXT.attr_sentence("lang", "source").alias("attr_text")
         )
-        embedder = hash_embed_pd if accel == "pd" else hash_embed
-        attr_vecs = embedder(attrs, attr_dim, text_col="attr_text")
+        attr_vecs = hash_embed_pd(attrs, attr_dim, text_col="attr_text")
         joined = vecs.join(
             attr_vecs.select("doc_id", F.col("embedding").alias("attr_vec")),
             "doc_id",
@@ -201,15 +192,9 @@ def dp_mode(
         # cached: the noised index is the reusable artifact (built once,
         # queried per query set — reference builds its DP FAISS index once,
         # pipeline_mode.py:87-91); kNN's rescore join reads it twice
-        if accel == "pd":
-            dp_index = _tracked_cache(build_dp_index_pd(
-                joined, "embedding", "attr_vec", "doc_id", sigma=sigma
-            ))
-        else:
-            dp_index = _tracked_cache(build_dp_index(
-                joined, "embedding", "attr_vec", "doc_id", sigma=sigma,
-                dim=attr_dim,
-            ))
+        dp_index = _tracked_cache(build_dp_index_pd(
+            joined, "embedding", "attr_vec", "doc_id", sigma=sigma
+        ))
         queries = make_queries(vecs, n_queries)
         dp_q = dp_query_vec(queries, "query_vec", attr_dim)
         return knn(
@@ -219,7 +204,7 @@ def dp_mode(
         )
 
     return _cached_plan(
-        spark, ("dp", sf_dir, k, n_queries, sigma, attr_dim, accel), build
+        spark, ("dp", sf_dir, k, n_queries, sigma, attr_dim), build
     )
 
 

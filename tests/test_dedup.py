@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from clinical_vector_search_spark.functions import hashing as H
+from clinical_vector_search_spark.functions import text as TXT
 from clinical_vector_search_spark.operators.dedup import (
     dedup_groups,
     embedding_neardup_pairs,
@@ -13,7 +15,6 @@ from clinical_vector_search_spark.operators.dedup import (
     minhash_candidate_pairs,
     ngram_jaccard_pairs,
     simhash,
-    simhash_pd,
 )
 
 BASE = (
@@ -71,28 +72,47 @@ def test_simhash_locality(docs):
     assert ham(h[0], h[2]) < ham(h[0], h[3])  # near-dup closer than far doc
 
 
+def _simhash_reference(df, bits):
+    """Plain-Python SimHash over JVM token hashes: tokens from
+    functions.text.tokenize and their md5_long values are evaluated on the
+    JVM, so the kernel's Python lowercasing/splitting/hashing is checked
+    against Spark's. Bit j = 1 iff Σ_tokens (±1 for hash bit j) > 0;
+    token-less docs are absent."""
+    rows = df.select(
+        "doc_id", F.transform(TXT.tokenize("text"), H.md5_long).alias("hv")
+    ).collect()
+    out = {}
+    for r in rows:
+        if not r.hv:
+            continue
+        sketch = 0
+        for j in range(bits):
+            if sum(1 if (h >> j) & 1 else -1 for h in r.hv) > 0:
+                sketch |= 1 << j
+        out[r.doc_id] = sketch
+    return out
+
+
 def test_simhash_pd_parity_small(spark, docs):
-    """mapInPandas scale path == expression/oracle path, incl. edge docs
-    (empty text / whitespace-only / null drop out of both)."""
+    """The mapInPandas kernel == the reference, incl. edge docs (empty
+    text / whitespace-only / null drop out) and mixed case."""
     extra = spark.createDataFrame(
         [(10, ""), (11, "   \t\n "), (12, None), (13, "single"),
          (14, "MiXeD   Case\ttokens MIXED case")],
         "doc_id long, text string",
     )
     both = docs.union(extra)
-    expr = {r.doc_id: r.simhash for r in simhash(both, bits=32).collect()}
-    pdp = {r.doc_id: r.simhash for r in simhash_pd(both, bits=32).collect()}
-    assert expr == pdp
-    assert set(expr) == {0, 1, 2, 3, 13, 14}  # token-less docs absent
+    got = {r.doc_id: r.simhash for r in simhash(both, bits=32).collect()}
+    assert got == _simhash_reference(both, 32)
+    assert set(got) == {0, 1, 2, 3, 13, 14}  # token-less docs absent
 
 
 def test_simhash_pd_parity_corpus(spark, sf_dir):
-    """Full-corpus parity at the test scale factor — the guarantee that the
-    bench path and the DuckDB-oracle path are the same operator."""
+    """Full-corpus parity with the reference at the test scale factor
+    (the dedup_simhash entries check the same kernel against DuckDB)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    expr = {r.doc_id: r.simhash for r in simhash(docs, bits=16).collect()}
-    pdp = {r.doc_id: r.simhash for r in simhash_pd(docs, bits=16).collect()}
-    assert expr == pdp
+    got = {r.doc_id: r.simhash for r in simhash(docs, bits=16).collect()}
+    assert got == _simhash_reference(docs, 16) and got
 
 
 def test_dedup_groups_topologies(spark):

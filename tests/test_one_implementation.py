@@ -1,0 +1,43 @@
+"""Each operator has one implementation: the package defines no pair of
+top-level functions ``X`` and ``X_pd`` unless ``X`` is allowlisted below
+with the reason its second implementation stays. Pure source scan, no
+Spark."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PACKAGE = Path(__file__).resolve().parent.parent / "clinical_vector_search_spark"
+
+ALLOWED_PAIRS = {
+    "ivfpq_encode": "perfbench's ingest workload pins ivfpq_index_add(encoder=)",
+    "hash_embed": "perfbench imports hash_embed_pd; bench.warm's plan shape "
+    "uses the expression hash_embed",
+    "semantic_clusters": "measured dispatcher: semantic_dedup(accel='auto') "
+    "picks by (dim, n_clusters) via choose_semantic_encoder",
+    "semantic_dedup_pairs": "measured dispatcher: same auto choice as "
+    "semantic_clusters",
+}
+
+
+def _top_level_defs() -> set[str]:
+    names: set[str] = set()
+    for path in PACKAGE.rglob("*.py"):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names.add(node.name)
+    return names
+
+
+def test_no_unlisted_pd_twins():
+    names = _top_level_defs()
+    pairs = {n[: -len("_pd")] for n in names if n.endswith("_pd")} & names
+    unlisted = sorted(pairs - ALLOWED_PAIRS.keys())
+    assert unlisted == [], (
+        f"operators with two implementations: {unlisted}; delete one, or "
+        "select between them at a measured crossover and allowlist it "
+        "with the reason"
+    )
+    # an allowlist entry whose pair is gone is stale
+    assert sorted(ALLOWED_PAIRS.keys() - pairs) == []

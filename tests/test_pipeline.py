@@ -12,7 +12,7 @@ from clinical_vector_search_spark.pipeline.documents import (
     normalize_headers,
     require_columns,
 )
-from clinical_vector_search_spark.pipeline.dp import build_dp_index, dp_query_vec
+from clinical_vector_search_spark.pipeline.dp import build_dp_index_pd, dp_query_vec
 from clinical_vector_search_spark.pipeline.evaluate import (
     evaluate_modes,
     mean_metrics,
@@ -109,7 +109,7 @@ def test_dp_index_noise_quality_and_norm(spark, sf_dir):
         F.col("embedding"),
         F.col("embedding").alias("attr_vec"),
     )
-    out = build_dp_index(joined, "embedding", "attr_vec", "doc_id", sigma=0.15, dim=64)
+    out = build_dp_index_pd(joined, "embedding", "attr_vec", "doc_id", sigma=0.15)
     rows = out.select("noise_cosine", V.l2_norm("dp_vec").alias("n")).collect()
     for r in rows:
         # σ=0.15 uniform noise over 64 dims → noise norm ≈ 0.69 on a unit
@@ -119,11 +119,11 @@ def test_dp_index_noise_quality_and_norm(spark, sf_dir):
 
 
 def test_dp_index_pd_parity(spark, sf_dir):
-    """numpy scale path == expression/oracle path: LCG noise bit-identical,
-    float stages within summation-order tolerance, same dp_vec layout."""
+    """The numpy index build == the same steps composed from the
+    functions.vector JVM expressions (normalize → add_noise → cosine →
+    weighted concat → normalize): LCG noise bit-identical, float stages
+    within summation-order tolerance, same dp_vec layout."""
     import numpy as np
-
-    from clinical_vector_search_spark.pipeline.dp import build_dp_index_pd
 
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(80)
     joined = vecs.select(
@@ -131,11 +131,18 @@ def test_dp_index_pd_parity(spark, sf_dir):
         F.col("embedding"),
         F.col("embedding").alias("attr_vec"),
     )
+    an = V.l2_normalize("attr_vec")
+    noisy = V.add_noise(an, "doc_id", 0.15, 64)
+    dp = V.weighted_concat(
+        V.l2_normalize("embedding"), V.l2_normalize(noisy), 0.7, 0.3
+    )
     expr = {
         r.doc_id: (np.array(r.dp_vec), r.noise_cosine)
-        for r in build_dp_index(
-            joined, "embedding", "attr_vec", "doc_id", sigma=0.15, dim=64
-        ).select("doc_id", "dp_vec", "noise_cosine").collect()
+        for r in joined.select(
+            "doc_id",
+            V.l2_normalize(dp).alias("dp_vec"),
+            V.cosine(an, noisy).alias("noise_cosine"),
+        ).collect()
     }
     pdp = {
         r.doc_id: (np.array(r.dp_vec), r.noise_cosine)
@@ -147,15 +154,6 @@ def test_dp_index_pd_parity(spark, sf_dir):
     for d in expr:
         assert np.allclose(expr[d][0], pdp[d][0], atol=1e-12)
         assert abs(expr[d][1] - pdp[d][1]) < 1e-12
-
-
-def test_dp_mode_accel_parity(spark, sf_dir):
-    """Both accel paths retrieve the same top-k ids in the same order."""
-    a = [(r.query_id, r.rank, r.doc_id)
-         for r in dp_mode(spark, sf_dir, k=5, n_queries=3, accel="pd").collect()]
-    b = [(r.query_id, r.rank, r.doc_id)
-         for r in dp_mode(spark, sf_dir, k=5, n_queries=3, accel="expr").collect()]
-    assert sorted(a) == sorted(b)
 
 
 def test_dp_query_zero_padding(spark):

@@ -1,5 +1,5 @@
-"""Product quantization: encoder twin parity, trained-codebook quality,
-and ADC recall against exact kNN."""
+"""Product quantization: encoder and ADC parity with plain-Python
+references, trained-codebook quality, and ADC recall against exact kNN."""
 
 from __future__ import annotations
 
@@ -15,16 +15,38 @@ def _books_and_vecs(spark, sf_dir):
     return pq_codebooks_lcg(64, 8, 16), emb
 
 
-def test_pq_encode_expression_vs_numpy_parity(spark, sf_dir):
-    from clinical_vector_search_spark.operators.pq import (
-        pq_encode,
-        pq_encode_pd,
-    )
+def _ref_dists(seg, book):
+    """Squared L2 from one segment to every codeword, summed d-order
+    left-to-right (the SQL oracle's list_sum fold)."""
+    out = []
+    for c in book:
+        acc = 0.0
+        for x, y in zip(seg, c):
+            acc += (x - y) * (x - y)
+        out.append(acc)
+    return out
+
+
+def _ref_tables(vec, books):
+    dsub = len(books[0][0])
+    return [
+        _ref_dists(vec[s * dsub : (s + 1) * dsub], book)
+        for s, book in enumerate(books)
+    ]
+
+
+def test_pq_encode_matches_python_reference(spark, sf_dir):
+    """codes[sub] = FIRST argmin of the d-order squared distance (the
+    SQL list_indexof(list_min) tie rule), for every vector."""
+    from clinical_vector_search_spark.operators.pq import pq_encode
 
     books, emb = _books_and_vecs(spark, sf_dir)
-    a = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
-    b = {r.vec_id: list(r.codes) for r in pq_encode_pd(emb, books).collect()}
-    assert a == b and len(a) > 0
+    got = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
+    want = {
+        r.vec_id: [t.index(min(t)) for t in _ref_tables(r.embedding, books)]
+        for r in emb.select("vec_id", "embedding").collect()
+    }
+    assert got == want and len(got) > 0
 
 
 def test_pq_trained_codebooks_cut_reconstruction_error(spark, sf_dir):
@@ -33,7 +55,7 @@ def test_pq_trained_codebooks_cut_reconstruction_error(spark, sf_dir):
     from clinical_vector_search_spark.operators.pq import (
         pq_codebooks_lcg,
         pq_codebooks_trained,
-        pq_encode_pd,
+        pq_encode,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -44,7 +66,7 @@ def test_pq_trained_codebooks_cut_reconstruction_error(spark, sf_dir):
     def mse(books):
         B = np.array(books)
         codes = np.array(
-            [r.codes for r in pq_encode_pd(emb, books).orderBy("vec_id").collect()]
+            [r.codes for r in pq_encode(emb, books).orderBy("vec_id").collect()]
         )
         segs = np.array(
             [r.embedding for r in emb.orderBy("vec_id").collect()]
@@ -68,7 +90,7 @@ def test_pq_adc_recall_improves_with_trained_books(spark, sf_dir):
         knn_pq_adc,
         pq_codebooks_lcg,
         pq_codebooks_trained,
-        pq_encode_pd,
+        pq_encode,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -83,7 +105,7 @@ def test_pq_adc_recall_improves_with_trained_books(spark, sf_dir):
         exact.setdefault(r.query_id, set()).add(r.doc_id)
 
     def recall(books):
-        codes = pq_encode_pd(emb, books).withColumnRenamed("vec_id", "doc_id")
+        codes = pq_encode(emb, books).withColumnRenamed("vec_id", "doc_id")
         got = {}
         for r in knn_pq_adc(queries, codes, books, 10).collect():
             got.setdefault(r.query_id, set()).add(r.doc_id)
@@ -100,26 +122,52 @@ def test_pq_adc_recall_improves_with_trained_books(spark, sf_dir):
 
 
 def test_pq_adc_numpy_twin_parity(spark, sf_dir):
-    """knn_pq_adc_pd must reproduce the expression ADC ranking exactly."""
+    """knn_pq_adc must reproduce a plain-Python ADC ranking exactly: per
+    query, dist = Σ_sub table[sub][code[sub]] (sub-order fold), top-10
+    by (dist, doc_id)."""
     from clinical_vector_search_spark.operators.pq import (
         knn_pq_adc,
-        knn_pq_adc_pd,
-        pq_codebooks_lcg,
-        pq_encode_pd,
+        pq_encode,
     )
 
     books, emb = _books_and_vecs(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    codes = pq_encode_pd(emb, books).withColumnRenamed("vec_id", "doc_id")
-    a = sorted(
+    codes = pq_encode(emb, books).withColumnRenamed("vec_id", "doc_id")
+    got = sorted(
         tuple(r) for r in knn_pq_adc(queries, codes, books, 10).collect()
     )
-    b = sorted(
-        tuple(r) for r in knn_pq_adc_pd(queries, codes, books, 10).collect()
+    doc_codes = [(r.doc_id, list(r.codes)) for r in codes.collect()]
+    want = []
+    for q in queries.collect():
+        tabs = _ref_tables(q.query_vec, books)
+        scored = []
+        for d, cs in doc_codes:
+            acc = 0.0
+            for s, c in enumerate(cs):
+                acc += tabs[s][c]
+            scored.append((acc, d))
+        for rank, (dist, d) in enumerate(sorted(scored)[:10], 1):
+            want.append((q.query_id, rank, d, dist))
+    want.sort()
+    assert [r[:3] for r in got] == [r[:3] for r in want] and len(got) == 50
+    assert all(abs(g[3] - w[3]) <= 1e-6 for g, w in zip(got, want))
+
+
+def test_knn_pq_adc_rejects_oversized_query_frame(spark, sf_dir):
+    """The query side collects to the driver: a frame above 100 000 rows
+    raises ValueError at plan build instead of collecting unbounded."""
+    from clinical_vector_search_spark.operators.pq import knn_pq_adc, pq_encode
+
+    books, emb = _books_and_vecs(spark, sf_dir)
+    codes = pq_encode(emb, books).withColumnRenamed("vec_id", "doc_id")
+    queries = spark.range(100_001).select(
+        F.col("id").alias("query_id"),
+        F.array_repeat(F.lit(0.0), 64).alias("query_vec"),
     )
-    assert a == b and len(a) == 50
+    with pytest.raises(ValueError, match="100000"):
+        knn_pq_adc(queries, codes, books, 10)
 
 
 def test_ivfpq_recall_and_fullprobe_equivalence(spark, sf_dir):
@@ -129,9 +177,9 @@ def test_ivfpq_recall_and_fullprobe_equivalence(spark, sf_dir):
     from clinical_vector_search_spark.functions import vector as V
     from clinical_vector_search_spark.operators.pq import (
         knn_ivfpq,
-        knn_pq_adc_pd,
+        knn_pq_adc,
         pq_codebooks_lcg,
-        pq_encode_pd,
+        pq_encode,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -149,9 +197,9 @@ def test_ivfpq_recall_and_fullprobe_equivalence(spark, sf_dir):
             queries, docs, 10, 64, books, n_centroids=8, n_probe=8
         ).collect()
     )
-    codes = pq_encode_pd(emb, books).withColumnRenamed("vec_id", "doc_id")
+    codes = pq_encode(emb, books).withColumnRenamed("vec_id", "doc_id")
     adc = sorted(
-        tuple(r) for r in knn_pq_adc_pd(queries, codes, books, 10).collect()
+        tuple(r) for r in knn_pq_adc(queries, codes, books, 10).collect()
     )
     assert full == adc  # all probes == no pruning
 
@@ -162,7 +210,7 @@ def test_ivfpq_recall_and_fullprobe_equivalence(spark, sf_dir):
     for r in partial:
         got.setdefault(r.query_id, set()).add(r.doc_id)
     ref = {}
-    for r in knn_pq_adc_pd(queries, codes, books, 10).collect():
+    for r in knn_pq_adc(queries, codes, books, 10).collect():
         ref.setdefault(r.query_id, set()).add(r.doc_id)
     recall = sum(len(got[q] & ref[q]) / len(ref[q]) for q in ref) / len(ref)
     n_docs = docs.count()
@@ -328,36 +376,6 @@ def test_pq_refine_recall_geq_adc(spark, sf_dir):
     # full-width coarse cut degenerates to the exact search
     full = topsets(knn_pq_refine(queries, docs, books, 10, k_coarse=n))
     assert full == exact
-
-
-def test_pq_refine_accel_pd_parity(spark, sf_dir):
-    """accel="pd" (Arrow encode + ADC twins) returns the identical
-    ranked rows as the expression path — same codes, same candidate
-    set, same exact rescore. This is the path the tuned m=16/ksub=256
-    configuration requires (expression encode is 16k terms/row there)."""
-    from clinical_vector_search_spark.operators.pq import (
-        knn_pq_refine,
-        pq_codebooks_lcg,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = pq_codebooks_lcg(64, 8, 16)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    docs = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
-    a = sorted(
-        map(tuple, knn_pq_refine(queries, docs, books, 10,
-                                 k_coarse=50).collect())
-    )
-    b = sorted(
-        map(tuple, knn_pq_refine(queries, docs, books, 10, k_coarse=50,
-                                 accel="pd").collect())
-    )
-    assert a == b and len(a) == 50
-    with pytest.raises(ValueError):
-        knn_pq_refine(queries, docs, books, 10, accel="nope")
 
 
 def test_residual_training_matches_residual_encoding(spark, sf_dir):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clinical_vector_search_spark.functions import text as TXT
+from clinical_vector_search_spark.operators.dedup import simhash
 
 
 @pytest.fixture(scope="module")
@@ -770,34 +771,68 @@ def test_trigram_search_lossless_pruning(spark):
         trigram_search(postings, docs, "ab")
 
 
+def _h60(s):
+    """functions.hashing.md5_long in Python: first 15 hex digits of md5."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def _jvm_tokens(df):
+    """doc_id -> functions.text.tokenize's tokens, evaluated on the JVM,
+    so a reference built on them pins the kernels' Python str.lower() /
+    whitespace split to Spark's lower() / split."""
+    return {
+        r.doc_id: r.toks
+        for r in df.select("doc_id", TXT.tokenize("text").alias("toks")).collect()
+        if r.toks
+    }
+
+
+def _cdc_reference(toks, w, divisor):
+    """Cut AFTER i + w for every window start i whose w-token hash is
+    ≡ 0 (mod divisor); chunks are the spans between 0, the cuts and n."""
+    n = len(toks)
+    cuts = [
+        i + w
+        for i in range(n - w + 1)
+        if _h60(" ".join(toks[i : i + w])) % divisor == 0
+    ]
+    bounds = sorted({0, n, *cuts})
+    out = []
+    for seq, (a, b) in enumerate(zip(bounds, bounds[1:])):
+        piece = " ".join(toks[a:b])
+        out.append((seq, piece, _h60(piece), b - a))
+    return out
+
+
 def test_cdc_chunk_rows_pd_parity(spark):
-    """r15 throughput twin: cdc_chunk_rows_pd must be bit-identical to
-    the expression path on every test sf (hashes, seqs, texts, token
-    counts), including short-doc (< w tokens) and multi-cut docs."""
-    from clinical_vector_search_spark.functions.text import (
-        cdc_chunk_rows,
-        cdc_chunk_rows_pd,
-    )
+    """cdc_chunk_rows equals a plain-Python chunker over JVM tokens on
+    every test sf (hashes, seqs, texts, token counts), including
+    short-doc (< w tokens) and multi-cut docs, plus non-ASCII text."""
+    from clinical_vector_search_spark.functions.text import cdc_chunk_rows
+
+    def check(docs, w, divisor):
+        got = sorted(
+            map(tuple, cdc_chunk_rows(docs, w=w, divisor=divisor).collect())
+        )
+        want = sorted(
+            (d, *c)
+            for d, toks in _jvm_tokens(docs).items()
+            for c in _cdc_reference(toks, w, divisor)
+        )
+        assert got == want, (w, divisor)
+        assert got  # non-degenerate
 
     for sf in ("sf0.001", "sf0.01"):
         docs = spark.read.parquet(f"/root/testdata/{sf}/documents.parquet")
         for w, divisor in ((4, 8), (3, 4)):
-            a = sorted(
-                map(tuple, cdc_chunk_rows(docs, w=w, divisor=divisor).collect())
-            )
-            b = sorted(
-                map(
-                    tuple,
-                    cdc_chunk_rows_pd(docs, w=w, divisor=divisor).collect(),
-                )
-            )
-            assert a == b, (sf, w, divisor)
-            assert a  # non-degenerate
+            check(docs, w, divisor)
 
-    # non-ASCII lowercasing parity (ADVICE r15): Python str.lower() and
-    # JVM lower() agree on these full-case mappings (U+0130 → i+U+0307,
-    # final sigma, ß) — pin it so a runtime divergence surfaces here
-    # instead of silently changing chunk hashes
+    # non-ASCII lowercasing (ADVICE r15): Python str.lower() and JVM
+    # lower() agree on these full-case mappings (U+0130 → i+U+0307,
+    # final sigma, ß) — pinned against the JVM tokens so a runtime
+    # divergence surfaces here instead of silently changing chunk hashes
     uni = spark.createDataFrame(
         [
             (1, "İstanbul ß ΣΊΣΥΦΟΣ κόσμε word İstanbul ß ΣΊΣΥΦΟΣ tail"),
@@ -805,39 +840,59 @@ def test_cdc_chunk_rows_pd_parity(spark):
         ],
         "doc_id long, text string",
     )
-    a = sorted(map(tuple, cdc_chunk_rows(uni, w=3, divisor=2).collect()))
-    b = sorted(map(tuple, cdc_chunk_rows_pd(uni, w=3, divisor=2).collect()))
-    assert a == b
-    assert a
+    check(uni, 3, 2)
+
+
+def _winnow_reference(toks, k, w):
+    """{(fp_pos, fp_hash)}: per window of w consecutive k-gram hashes
+    (md5_long % 2^31) the minimum, ties to the RIGHTMOST position; a doc
+    with fewer than w grams keeps its global minimum. Grams at position
+    ≥ 2^21 are dropped (the packed-key position cap)."""
+    hs = [
+        _h60(" ".join(toks[i : i + k])) % (1 << 31)
+        for i in range(min(len(toks) - k + 1, 1 << 21))
+    ]
+    if not hs:
+        return set()
+    if len(hs) < w:
+        wins = [range(len(hs))]
+    else:
+        wins = [range(i, i + w) for i in range(len(hs) - w + 1)]
+    out = set()
+    for win in wins:
+        m = min(hs[j] for j in win)
+        out.add((max(j for j in win if hs[j] == m), m))
+    return out
 
 
 def test_winnowing_pd_parity(spark):
-    """r16 throughput twin: winnowing_fingerprints_pd must be
-    bit-identical to the expression path on every test sf (values AND
-    dtypes), plus constructed edge docs: empty, < k tokens, exactly k
-    tokens, m < w grams, m == w, hash ties, and non-ASCII text (the
-    Python str.lower() ↔ JVM lower() assumption both Arrow twins
-    document)."""
+    """winnowing_fingerprints equals the sequential rule over JVM tokens
+    on every test sf (values AND bigint dtypes), plus constructed edge
+    docs: empty, < k tokens, exactly k tokens, m < w grams, m == w, hash
+    ties, and non-ASCII text (the Python str.lower() ↔ JVM lower()
+    assumption the kernel documents)."""
     from clinical_vector_search_spark.functions.text import (
         winnowing_fingerprints,
-        winnowing_fingerprints_pd,
     )
 
-    def both(df, k, w):
-        a = winnowing_fingerprints(df, k=k, w=w)
-        b = winnowing_fingerprints_pd(df, k=k, w=w)
-        assert a.dtypes == b.dtypes
-        return (
-            sorted(map(tuple, a.collect())),
-            sorted(map(tuple, b.collect())),
+    def check(df, k, w):
+        fp = winnowing_fingerprints(df, k=k, w=w)
+        assert fp.dtypes == [
+            ("doc_id", "bigint"), ("fp_pos", "bigint"), ("fp_hash", "bigint")
+        ]
+        got = sorted(map(tuple, fp.collect()))
+        want = sorted(
+            (d, *f)
+            for d, toks in _jvm_tokens(df).items()
+            for f in _winnow_reference(toks, k, w)
         )
+        assert got == want, (k, w)
+        assert got  # non-degenerate
 
     for sf in ("sf0.001", "sf0.01"):
         docs = spark.read.parquet(f"/root/testdata/{sf}/documents.parquet")
         for k, w in ((3, 4), (2, 5)):
-            a, b = both(docs, k, w)
-            assert a == b, (sf, k, w)
-            assert a  # non-degenerate
+            check(docs, k, w)
 
     edge = spark.createDataFrame(
         [
@@ -853,6 +908,17 @@ def test_winnowing_pd_parity(spark):
         ],
         "doc_id long, text string",
     )
-    a, b = both(edge, 3, 4)
-    assert a == b
-    assert a
+    check(edge, 3, 4)
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [TXT.cdc_chunk_rows, TXT.winnowing_fingerprints, simhash],
+    ids=lambda f: f.__name__,
+)
+def test_arrow_text_kernels_reject_non_integral_id(spark, kernel):
+    """The kernels' output schema declares ``{id_col} long``: a string id
+    is refused at plan build with the column and its type named."""
+    df = spark.createDataFrame([("a", "some text here")], "doc_id string, text string")
+    with pytest.raises(ValueError, match="'doc_id'.*string"):
+        kernel(df)

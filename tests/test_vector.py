@@ -26,10 +26,14 @@ def vdf(spark):
 def test_normalize_unit_norm_and_idempotent(spark, vdf):
     out = vdf.select(
         "id",
+        V.l2_normalize("v").alias("u"),
         V.l2_norm(V.l2_normalize("v")).alias("n1"),
         V.l2_norm(V.l2_normalize(V.l2_normalize("v"))).alias("n2"),
     ).collect()
+    m = dict(VECS)
     for r in out:
+        expect = np.array(m[r.id]) / (np.linalg.norm(m[r.id]) + V.EPS)
+        assert np.allclose(r.u, expect, atol=1e-12)
         if r.id == 2:
             assert r.n1 == 0.0 and r.n2 == 0.0  # zero stays zero
         else:
@@ -109,6 +113,17 @@ def test_add_noise_bounded_and_seeded(spark, vdf):
         assert abs(noisy - orig) <= sigma  # |U(-sigma, sigma)| bound
 
 
+def _proj_matrix_np(in_dim, out_dim):
+    """NumPy reference for V.proj_weight: the full R[in_dim, out_dim]
+    matrix from the same LCG (all index math in int64, indices < 2^31)."""
+    idx = (
+        np.arange(in_dim, dtype="int64")[:, None] * out_dim
+        + np.arange(out_dim, dtype="int64")[None, :]
+    ) % V.LCG_M
+    x = (V.PROJ_A * idx + V.PROJ_C) % V.LCG_M
+    return x.astype("float64") / float(V.LCG_M) - 0.5
+
+
 def test_random_projection_matches_numpy_twin(spark, vdf):
     out_dim = 5
     expr_rows = {
@@ -117,27 +132,11 @@ def test_random_projection_matches_numpy_twin(spark, vdf):
             "id", V.random_projection("v", 3, out_dim).alias("p")
         ).collect()
     }
-    R = V._proj_matrix_np(3, out_dim)
+    R = _proj_matrix_np(3, out_dim)
     for i, v in VECS:
         expect = np.array(v) @ R
         got = np.array(expr_rows[i])
         assert np.allclose(got, expect, atol=1e-9)
-
-
-def test_random_projection_pd_matches_expression(spark, vdf):
-    out_dim = 4
-    pd_rows = {
-        r.id: list(r.proj_vec)
-        for r in V.random_projection_pd(vdf, "v", "id", 3, out_dim).collect()
-    }
-    expr_rows = {
-        r.id: list(r.p)
-        for r in vdf.select(
-            "id", V.random_projection("v", 3, out_dim).alias("p")
-        ).collect()
-    }
-    for i in pd_rows:
-        assert np.allclose(pd_rows[i], expr_rows[i], atol=1e-9)
 
 
 def test_hyperplane_bucket_range(spark, vdf):
@@ -147,16 +146,6 @@ def test_hyperplane_bucket_range(spark, vdf):
     ).collect()
     for r in out:
         assert 0 <= r.b < 2**n_planes
-
-
-def test_normalize_pd_iter_matches_expression(spark, vdf):
-    import pandas as pd
-
-    s = pd.Series([v for _, v in VECS if any(v)])
-    (out,) = list(V.normalize_pd_iter(iter([s])))
-    for got, (_, v) in zip(out, [x for x in VECS if any(x[1])]):
-        expect = np.array(v) / (np.linalg.norm(v) + V.EPS)
-        assert np.allclose(got, expect, atol=1e-12)
 
 
 def test_quantize_int8_roundtrip(spark, sf_dir):

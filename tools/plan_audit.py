@@ -399,12 +399,13 @@ def main() -> int:
         and "CartesianProduct" not in plan,
     )
 
-    # 7f. PQ ADC: query tables broadcast; codes side never exchanges before
-    # the scoring join
+    # 7f. PQ ADC: a MapInPandas scores the codes scan map-side and only
+    # per-partition top-k survivors shuffle (the one Exchange sits above a
+    # WindowGroupLimit); no cartesian / nested-loop pairing
     from clinical_vector_search_spark.operators.pq import (
         knn_pq_adc,
         pq_codebooks_lcg,
-        pq_encode_pd,
+        pq_encode,
     )
 
     books = pq_codebooks_lcg(64, 8, 16)
@@ -412,11 +413,21 @@ def main() -> int:
     pq_q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    pq_codes = pq_encode_pd(emb, books).withColumnRenamed("vec_id", "doc_id")
+    pq_codes = pq_encode(emb, books).withColumnRenamed("vec_id", "doc_id")
     plan = formatted(knn_pq_adc(pq_q, pq_codes, books, 10))
+    tree = plan.split("\n\n")[0]
+    below_exchange = tree.split("Exchange", 1)[-1]
     check(
-        "pq adc: query distance tables broadcast (BNLJ, no CartesianProduct)",
-        "BroadcastNestedLoopJoin" in plan and "CartesianProduct" not in plan,
+        "pq adc: MapInPandas scores the codes scan, one Exchange above a "
+        "WindowGroupLimit, no CartesianProduct/NestedLoopJoin",
+        n_nodes(plan, "MapInPandas") >= 1
+        and n_nodes(plan, "Exchange") == 1
+        and "WindowGroupLimit" in below_exchange
+        and below_exchange.index("WindowGroupLimit")
+        < below_exchange.index("MapInPandas")
+        and "CartesianProduct" not in plan
+        and "NestedLoopJoin" not in plan,
+        tree,
     )
 
     # 8. dedup plans: no cartesian product anywhere
@@ -674,13 +685,13 @@ def main() -> int:
         and "hashpartitioning" not in plan.split("BroadcastHashJoin")[0],
     )
 
-    # 21. CDC chunking: pure expressions — zero exchanges until a
+    # 21. CDC chunking: map-only Arrow kernel — zero exchanges until a
     # consumer aggregates
     from clinical_vector_search_spark.functions.text import cdc_chunk_rows
 
     plan = formatted(cdc_chunk_rows(docs, w=4, divisor=8))
     check(
-        "cdc_chunk_rows: map-side expressions, zero exchanges",
+        "cdc_chunk_rows: map-side kernel, zero exchanges",
         n_nodes(plan, "Exchange") == 0,
     )
 
