@@ -3991,19 +3991,21 @@ def q_dedup_groups_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL streaming near-dup ingestion (operators/dedup.py
-    streaming_neardup_ingest): the documents table replays as 4
-    micro-batches (availableNow, maxFilesPerTrigger=1); each batch
-    probes-then-appends the persisted band index via foreachBatch. The
+    """REAL streaming near-dup ingestion (io/tables.py
+    streaming_index_ingest over operators/dedup.py ingest_neardup_batch):
+    the documents table replays as 4 micro-batches (availableNow,
+    maxFilesPerTrigger=1); each batch probes-then-appends the persisted
+    band index via foreachBatch. The
     accumulated pair set is chunking-invariant (each pair lands once,
     when its later doc arrives), so the oracle is the ONE-SHOT full
     banded pair recompute."""
     import shutil
     import tempfile
 
+    from clinical_vector_search_spark.io.tables import streaming_index_ingest
     from clinical_vector_search_spark.operators.dedup import (
+        ingest_neardup_batch,
         read_neardup_output,
-        streaming_neardup_ingest,
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -4016,14 +4018,12 @@ def q_dedup_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{base}/docs")
     )
-    q = streaming_neardup_ingest(
-        spark,
+    q = streaming_index_ingest(
         stream,
-        f"{base}/index",
-        f"{base}/pairs",
-        MINHASH_HASHES,
-        2,
-        SHINGLE_N,
+        lambda df, bid, rid: ingest_neardup_batch(
+            spark, df, bid, f"{base}/index", f"{base}/pairs",
+            MINHASH_HASHES, 2, SHINGLE_N, run_id=rid,
+        ),
         checkpoint_path=f"{base}/ckpt",
     )
     if not q.awaitTermination(300):

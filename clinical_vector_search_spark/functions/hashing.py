@@ -32,13 +32,6 @@ def salted_md5_long(c: Column | str, salt: int | Column) -> Column:
     return md5_long(F.concat_ws(":", salt.cast("string"), c))
 
 
-def md5_bit(c: Column | str, bit: int) -> Column:
-    """Bit ``bit`` (0-based, little-endian) of :func:`md5_long` — used by
-    SimHash. Returns 0/1 int. ``bit`` must be a Python int (expressions are
-    generated per-bit at plan-build time)."""
-    return F.shiftright(md5_long(c), bit).bitwiseAND(F.lit(1))
-
-
 def dataset_fingerprint(df, cols: list[str]):
     """Order-invariant content fingerprint of a DataFrame — the dataset
     identity primitive for lineage / reproducibility checks ("is the

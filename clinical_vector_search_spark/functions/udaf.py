@@ -1,10 +1,9 @@
 """Vectorized UDF surface completion: SCALAR and GROUPED_AGG pandas_udf.
 
 The engine's Python hot paths are mapInPandas/applyInPandas (batch
-kernels), applyInPandasWithState / transformWithStateInPandas
-(streaming state), and a Python UDTF — this module adds the remaining
-two Arrow-vectorized flavors so every UDF shape Spark 4 offers has a
-working, tested instance:
+kernels) and applyInPandasWithState (streaming state) — this module
+adds the two remaining Arrow-vectorized flavors, each with a working,
+tested instance:
 
 * :func:`softclip` — SCALAR pandas_udf: elementwise over Arrow batches,
   usable anywhere a Column is (select/filter/join keys). ~10-100× the

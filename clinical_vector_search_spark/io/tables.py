@@ -16,23 +16,9 @@ from pyspark.sql import functions as F
 
 from clinical_vector_search_spark.functions import vector as V
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S4: parquet scan of a driver testdata table."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            read_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -51,14 +37,27 @@ def run_write_jobs(*thunks) -> None:
     leaves the cluster idle (measured at sf0.1: 0.30+0.35+0.20 s
     sequential for the bm25 ingest trilogy). FIFO scheduling back-fills
     the next write's tasks onto freed executors. Exceptions propagate
-    to the caller (all futures are awaited, first raise wins)."""
+    to the caller (all futures are awaited, first raise wins).
+
+    Each thunk runs under the caller's job group, description and tags:
+    PySpark's pinned threads start with empty local properties, so a
+    bare pool thread's jobs would be unlabelled in the event log and
+    out of reach of ``cancelJobGroup``. Each thunk is wrapped on its
+    own because the wrapper hands its thread the one properties copy
+    it took, and Spark writes per-job keys (the SQL execution id) into
+    that object: threads sharing a copy would race on those keys."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     if len(thunks) == 1:
         thunks[0]()
         return
+    spark = SparkSession.getActiveSession()
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
         for f in futures:
             f.result()
 
@@ -67,22 +66,6 @@ def write_csv_single(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S7: single-file CSV metric sink (coalesce(1) — metric tables are
     tiny by construction; never use for data-scale outputs)."""
     df.coalesce(1).write.mode(mode).csv(path, header=True)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-lines scan — the interchange format training-data pipelines
-    actually ship (one JSON doc per line). Spark's json source is already
-    line-delimited by default; pass ``schema`` to skip the inference scan
-    (at 100 TB, schema inference is a full extra pass — always pass it)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (one doc per line, partition-parallel files)."""
-    df.write.mode(mode).json(path)
 
 
 def write_partitioned(
@@ -388,13 +371,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Scan a bucketed table registered by ``write_bucketed``. The scan
-    reports its bucketing to the planner, which is what lets downstream
-    joins/aggs on the bucket key drop their Exchange."""
-    return spark.table(table)
-
-
 def build_bm25_index_table(
     docs: DataFrame, path: str, id_col: str = "doc_id", text_col: str = "text"
 ) -> None:
@@ -509,7 +485,7 @@ def compact_parquet(
 
     ``recursive=True`` lists leaf files recursively — for sinks that
     write one plain subdirectory per batch (the idempotent
-    ``streaming_neardup_ingest`` layout). Do NOT use it on Hive
+    ``dedup.ingest_neardup_batch`` layout). Do NOT use it on Hive
     ``key=value``-partitioned directories: recursive listing disables
     partition inference, so the partition column would be dropped."""
     with compaction_lease(spark, path, break_stale_lease_after_sec):
@@ -1302,8 +1278,9 @@ def streaming_index_ingest(
     handling) reaches all indexes: validate the run_id BEFORE the
     stream starts (not mid-batch), compose ``add_fn(batch_df,
     batch_id, run_id)`` under an ``availableNow`` trigger, wire the
-    optional checkpoint, return the started ``StreamingQuery``. Each
-    index's ``streaming_*_ingest`` is a one-line closure over its add.
+    optional checkpoint, return the started ``StreamingQuery``. Callers
+    pass their index's batch add directly, e.g. ``lambda df, bid, rid:
+    bm25_index_add(spark, df, bid, index_path, run_id=rid)``.
     Idempotency comes from the adds themselves (batch-id overwrite);
     streaming batch ids are unique only per CHECKPOINT — pass a
     distinct ``run_id`` when extending an index from a new

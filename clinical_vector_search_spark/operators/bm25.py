@@ -562,42 +562,3 @@ def bm25_index_delete(
                 f"{index_path}/deleted/{dsub}"
             ),
         )
-
-
-def streaming_bm25_ingest(
-    spark,
-    doc_stream: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_path: str | None = None,
-    run_id: str | None = None,
-):
-    """Streaming BM25 index maintenance — the ``foreachBatch``
-    composition of :func:`bm25_index_add` over a document stream,
-    completing the streaming story for the lexical index exactly as
-    ``dedup.streaming_neardup_ingest`` does for the band index: each
-    micro-batch folds its additive sufficient statistics (postings /
-    df deltas / scalars) into the persisted index with cost ∝ batch,
-    and the sink is idempotent under ``foreachBatch``'s at-least-once
-    replays because every batch OVERWRITES its own batch-id-derived
-    subdirectories. Since each doc must arrive in exactly ONE batch
-    (the append-only corpus contract of :func:`bm25_index_add`),
-    dedupe upstream. Streaming batch ids are unique only PER
-    CHECKPOINT — resume the same logical stream with the same
-    ``checkpoint_path``, and pass a distinct ``run_id`` when extending
-    an existing index from a NEW query/checkpoint (the
-    ``ingest_neardup_batch`` contract, same wording, same reason).
-    Returns the ``StreamingQuery`` (caller awaits); read back with
-    :func:`bm25_read_index` and compact each stat subdirectory with
-    ``io.tables.compact_batched`` on the usual cadence."""
-    from clinical_vector_search_spark.io.tables import streaming_index_ingest
-
-    return streaming_index_ingest(
-        doc_stream,
-        lambda batch_df, bid, rid: bm25_index_add(
-            spark, batch_df, bid, index_path, id_col, text_col, rid
-        ),
-        checkpoint_path,
-        run_id,
-    )

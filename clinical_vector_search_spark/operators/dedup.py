@@ -248,7 +248,7 @@ def _incremental_pairs_from_buckets(
     materialized: bool = False,
 ) -> DataFrame:
     """Bucket-level core of :func:`minhash_pairs_incremental`, reused by
-    :func:`streaming_neardup_ingest` where the batch's (doc_id, band,
+    :func:`ingest_neardup_batch` where the batch's (doc_id, band,
     bucket) rows are computed once and both probed and appended.
 
     ``materialized=True`` says the input is already pinned (e.g. a
@@ -306,7 +306,7 @@ def _incremental_pairs_from_buckets(
 
 
 def read_neardup_output(spark, path: str) -> DataFrame:
-    """Read a :func:`streaming_neardup_ingest` pairs/index directory.
+    """Read an :func:`ingest_neardup_batch` pairs/index directory.
     The sink writes one ``batch-{id}`` subdirectory per micro-batch (the
     idempotent-retry layout), so a plain ``spark.read.parquet`` would
     not see the leaf files; the recursive listing also tolerates the
@@ -330,28 +330,53 @@ def ingest_neardup_batch(
     id_col: str = "doc_id",
     run_id: str | None = None,
 ) -> None:
-    """One micro-batch of :func:`streaming_neardup_ingest`, exposed at
-    module level so the idempotency contract is directly testable:
-    running the same (batch, batch_id) twice — the ``foreachBatch``
-    at-least-once retry — leaves both sinks bit-identical, because each
-    batch OVERWRITES its own ``batch-{id}`` subdirectory rather than
-    appending. Index discovery is a ``try: read`` (storage-agnostic —
-    works on hdfs://, s3a://, … where an ``os.walk`` would silently
+    """Streaming near-dup ingestion, one micro-batch: the incremental
+    step of :func:`minhash_pairs_incremental`. Stream a document source
+    through it with ``io.tables.streaming_index_ingest(stream, lambda
+    df, bid, rid: ingest_neardup_batch(spark, df, bid, …, run_id=rid),
+    checkpoint_path, run_id)``. The batch's (doc_id, band, bucket) rows
+    are computed ONCE (localCheckpoint), probed against the persisted
+    band index for new×new + new×old candidate pairs (broadcast
+    touched-bucket semi-join — no old×old rescan), and appended to
+    ``index_path`` so later batches see them; the pairs go to
+    ``pairs_path``.
+
+    The accumulated pair set is INVARIANT to how the stream is chunked:
+    in a failure-free run every pair is emitted exactly once, in the
+    batch of whichever doc arrives later (same batch ⇒ the new×new
+    term), so replaying any partitioning of a corpus reproduces exactly
+    the one-shot :func:`minhash_candidate_pairs` output — the
+    oracle-checked contract. ``foreachBatch`` is only at-least-once, so
+    the sink is IDEMPOTENT: running the same (batch, batch_id) twice
+    leaves both sinks bit-identical, because each batch OVERWRITES its
+    own ``batch-{id}`` subdirectory rather than appending, and
+    re-probing an index that already holds the batch's own buckets
+    emits the identical pair set (batch-self pairs rediscovered through
+    the probe collapse into the new×new term under the final
+    ``distinct``). Index discovery is a ``try: read`` (storage-agnostic
+    — works on hdfs://, s3a://, … where an ``os.walk`` would silently
     report 'no index' and drop every new×old pair).
 
     BECAUSE the sink overwrites, the subdirectory name must be unique
     per logical batch FOR THE LIFETIME OF THE INDEX — and streaming
     batch ids are only unique per checkpoint (a new query with a fresh
-    checkpoint restarts at 0 and would clobber a prior run's batches).
-    ``run_id`` namespaces the subdirectory (``batch-{run_id}-{id}``)
-    for exactly that case: extending an existing index from a NEW
+    checkpoint restarts at 0 and would OVERWRITE a prior run's batch-0
+    subdirectory, silently dropping its buckets and pairs). Resume the
+    same logical stream with the same checkpoint (ids continue
+    monotonically). ``run_id`` namespaces the subdirectory
+    (``batch-{run_id}-{id}``): extending an existing index from a NEW
     query/checkpoint, pass a distinct run_id (e.g. the ingest date);
     retries and checkpoint-restarts of the SAME logical run must reuse
     the same run_id so redelivery stays idempotent. Idempotency holds
     UP TO the last ``io.tables.compact_batched`` — a redelivery of a
     batch that compaction already folded is refused loudly (its rows
     live in the compacted files; rewriting the subdirectory would
-    double-count them)."""
+    double-count them). Readers list recursively
+    (:func:`read_neardup_output`), which also accepts the mixed
+    compacted-flat + new-subdir layout. Single writer assumed, like the
+    other index-maintenance sinks in ``io.tables``; long-running
+    streams add one subdirectory per batch, so schedule
+    ``compact_batched`` over ``index_path`` on the usual cadence."""
     from pyspark.errors import AnalysisException
 
     from clinical_vector_search_spark.io.tables import (
@@ -390,79 +415,6 @@ def ingest_neardup_batch(
     with ingest_markers(spark, [pairs_path, index_path]):
         pairs.write.mode("overwrite").parquet(f"{pairs_path}/{sub}")
         nb.write.mode("overwrite").parquet(f"{index_path}/{sub}")
-
-
-def streaming_neardup_ingest(
-    spark,
-    doc_stream: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_size: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    checkpoint_path: str | None = None,
-    run_id: str | None = None,
-):
-    """Streaming near-dup ingestion: the ``foreachBatch`` composition of
-    :func:`minhash_pairs_incremental` over a document stream. Each
-    micro-batch computes its (doc_id, band, bucket) rows ONCE
-    (localCheckpoint), probes the persisted band index for new×new +
-    new×old candidate pairs (broadcast touched-bucket semi-join — the
-    batch never rescans old×old), appends the pairs to ``pairs_path``,
-    and appends its buckets to ``index_path`` so later batches see them.
-
-    The accumulated pair set is INVARIANT to how the stream is chunked:
-    in a failure-free run every pair is emitted exactly once, in the
-    batch of whichever doc arrives later (same batch ⇒ the new×new
-    term), so replaying any partitioning of a corpus reproduces exactly
-    the one-shot :func:`minhash_candidate_pairs` output — the
-    oracle-checked contract. ``foreachBatch`` is only at-least-once, so
-    the sink is made IDEMPOTENT: each batch overwrites its own
-    batch-id-derived subdirectory (``{path}/batch-{id}``, or
-    ``batch-{run_id}-{id}`` when ``run_id`` is given) for both
-    pairs and index rows — a retry rewrites the same subpaths instead
-    of appending duplicates, and re-probing an index that already holds
-    the batch's own buckets (retry after a completed index write) emits
-    the identical pair set, because batch-self pairs rediscovered
-    through the probe collapse into the new×new term under the final
-    ``distinct``. Streaming batch ids are unique only PER CHECKPOINT:
-    resume the same logical stream with the same ``checkpoint_path``
-    (ids continue monotonically), and when extending an existing index
-    from a NEW query/checkpoint pass a distinct ``run_id`` (e.g. the
-    ingest date) — otherwise the new run restarts at batch 0 and
-    OVERWRITES the old run's batch-0 subdirectory, silently dropping
-    its buckets and pairs. Readers must therefore list recursively
-    (``spark.read.option("recursiveFileLookup", "true")``); both paths
-    stay storage-agnostic — no driver-side filesystem walk. Returns the
-    ``StreamingQuery`` (caller awaits). Single writer assumed, like the
-    other index-maintenance sinks in ``io.tables``; long-running
-    streams add one subdirectory per batch, so schedule
-    ``io.tables.compact_batched`` over ``index_path``
-    on the same cadence as any other append-maintained index (the
-    recursive read accepts the mixed compacted-flat + new-subdir
-    layout)."""
-    from clinical_vector_search_spark.io.tables import streaming_index_ingest
-
-    return streaming_index_ingest(
-        doc_stream,
-        lambda batch_df, bid, rid: ingest_neardup_batch(
-            spark,
-            batch_df,
-            bid,
-            index_path,
-            pairs_path,
-            num_hashes,
-            rows_per_band,
-            shingle_size,
-            text_col,
-            id_col,
-            rid,
-        ),
-        checkpoint_path,
-        run_id,
-    )
 
 
 def span_dedup(
@@ -2467,9 +2419,9 @@ def ingest_semantic_batch(
     encoder: str | None = None,
     run_id: str | None = None,
 ) -> None:
-    """One micro-batch of :func:`streaming_semantic_ingest`, exposed at
-    module level so the idempotency contract is directly testable (the
-    ``ingest_neardup_batch`` pattern): assign the batch ONCE
+    """Streaming SemDeDup maintenance, one micro-batch (stream it with
+    ``io.tables.streaming_index_ingest``; the contract is
+    :func:`ingest_neardup_batch`'s): assign the batch ONCE
     (localCheckpoint — both probed and appended), emit the new
     within-cluster pairs against the surviving corpus assignments
     (tombstoned ids can form no new pairs), then OVERWRITE the batch's
@@ -2509,47 +2461,6 @@ def ingest_semantic_batch(
     with ingest_markers(spark, [pairs_path, index_path]):
         pairs.write.mode("overwrite").parquet(f"{pairs_path}/{sub}")
         asg.write.mode("overwrite").parquet(f"{index_path}/{sub}")
-
-
-def streaming_semantic_ingest(
-    spark,
-    vec_stream: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    dim: int,
-    threshold: float = 0.35,
-    n_clusters: int = 8,
-    centroids: list[list[float]] | None = None,
-    tombstone_path: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    encoder: str | None = None,
-    checkpoint_path: str | None = None,
-    run_id: str | None = None,
-):
-    """Streaming SemDeDup maintenance: the ``foreachBatch`` composition
-    of :func:`ingest_semantic_batch` over a vector stream — each
-    micro-batch assigns map-side against the frozen centroids, appends
-    its (id, cluster, _nv) rows so later batches see them, and emits
-    its new within-cluster pairs; the accumulated pair set equals the
-    one-shot :func:`semantic_dedup_pairs` regardless of chunking.
-    Same streaming contract as every maintained index here
-    (``io.tables.streaming_index_ingest``): idempotent batch-id
-    overwrite under at-least-once replays, ``run_id`` namespacing for
-    new-checkpoint extension, ``compact_batched`` cadence. Returns the
-    ``StreamingQuery``."""
-    from clinical_vector_search_spark.io.tables import streaming_index_ingest
-
-    return streaming_index_ingest(
-        vec_stream,
-        lambda batch_df, bid, rid: ingest_semantic_batch(
-            spark, batch_df, bid, index_path, pairs_path, dim, threshold,
-            n_clusters, centroids, tombstone_path, id_col, vec_col,
-            encoder, rid,
-        ),
-        checkpoint_path,
-        run_id,
-    )
 
 
 def reindex_semantic(

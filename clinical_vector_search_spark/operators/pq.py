@@ -866,55 +866,6 @@ def ivfpq_index_delete(
         )
 
 
-def streaming_ivfpq_ingest(
-    spark,
-    vec_stream: DataFrame,
-    index_path: str,
-    dim: int,
-    books: list,
-    centroids: list | None = None,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    residual: bool = False,
-    encoder: str = "pd",
-    checkpoint_path: str | None = None,
-    run_id: str | None = None,
-):
-    """Streaming IVF-PQ index maintenance — the ``foreachBatch``
-    composition of :func:`ivfpq_index_add` over a vector stream (FAISS
-    ``IndexIVFPQ.add`` fed by a stream), completing the streaming story
-    for the vector index exactly as ``dedup.streaming_neardup_ingest``
-    does for the band index: each micro-batch is coarse-assigned to the
-    EXISTING centroids and PQ-encoded against the EXISTING codebooks
-    entirely map-side (cost ∝ batch, the index is never rescanned), and
-    the sink is idempotent under ``foreachBatch``'s at-least-once
-    replays because every batch OVERWRITES its own batch-id-derived
-    subdirectory. ``encoder`` defaults to the Arrow/NumPy twin here —
-    micro-batches are small, so the expression encoder's ~2 s per-plan
-    compile would dominate every trigger (see :func:`ivfpq_index_add`).
-    Streaming batch ids are unique only PER CHECKPOINT — resume the
-    same logical stream with the same ``checkpoint_path``, and pass a
-    distinct ``run_id`` when extending an existing index from a NEW
-    query/checkpoint (the ``ingest_neardup_batch`` contract). Returns
-    the ``StreamingQuery``; read back with :func:`read_ivfpq_index`,
-    serve with :func:`knn_ivfpq_codes` / :func:`knn_refine_codes`,
-    compact with ``io.tables.compact_batched`` on the usual cadence."""
-    from clinical_vector_search_spark.io.tables import (
-        streaming_index_ingest,
-    )
-
-    return streaming_index_ingest(
-        vec_stream,
-        lambda batch_df, bid, rid: ivfpq_index_add(
-            spark, batch_df, bid, index_path, dim, books, centroids,
-            n_centroids, id_col, vec_col, residual, encoder, rid,
-        ),
-        checkpoint_path,
-        run_id,
-    )
-
-
 def write_trained_state(
     spark,
     index_path: str,

@@ -389,36 +389,6 @@ def tfidf_read_index(spark, index_path: str) -> DataFrame:
     )
 
 
-def streaming_tfidf_ingest(
-    spark,
-    doc_stream: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_path: str | None = None,
-    run_id: str | None = None,
-):
-    """Streaming TF-IDF index maintenance — ``foreachBatch`` over
-    :func:`tfidf_index_add`, completing the streaming story for the VSM
-    index exactly as ``bm25.streaming_bm25_ingest`` does for BM25: each
-    micro-batch folds its additive statistics with cost ∝ batch, and
-    the sink is idempotent under at-least-once replays (batch-id
-    overwrite). Each doc must arrive in exactly ONE batch — dedupe
-    upstream; pass a distinct ``run_id`` when extending an existing
-    index from a NEW query/checkpoint. Returns the ``StreamingQuery``
-    (caller awaits); read back with :func:`tfidf_read_index`."""
-    from clinical_vector_search_spark.io.tables import streaming_index_ingest
-
-    return streaming_index_ingest(
-        doc_stream,
-        lambda batch_df, bid, rid: tfidf_index_add(
-            spark, batch_df, bid, index_path, id_col, text_col, rid
-        ),
-        checkpoint_path,
-        run_id,
-    )
-
-
 def trigram_postings(
     docs: DataFrame,
     text_col: str = "text",
@@ -575,29 +545,3 @@ def trigram_read_index(spark, index_path: str, id_col: str = "doc_id"):
         if not is_absence_error(e):
             raise
     return postings.select(F.col("doc").alias(id_col), "trigram")
-
-
-def streaming_trigram_ingest(
-    spark,
-    doc_stream: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_path: str | None = None,
-    run_id: str | None = None,
-):
-    """Streaming trigram-index maintenance — ``foreachBatch`` over
-    :func:`trigram_index_add`, same contract as the BM25/TF-IDF/IVF-PQ
-    streaming twins: cost ∝ micro-batch, idempotent batch-id overwrite,
-    each doc in exactly ONE batch, ``run_id`` for a new
-    query/checkpoint. Returns the ``StreamingQuery``."""
-    from clinical_vector_search_spark.io.tables import streaming_index_ingest
-
-    return streaming_index_ingest(
-        doc_stream,
-        lambda batch_df, bid, rid: trigram_index_add(
-            spark, batch_df, bid, index_path, id_col, text_col, rid
-        ),
-        checkpoint_path,
-        run_id,
-    )

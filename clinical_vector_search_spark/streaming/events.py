@@ -1201,61 +1201,6 @@ def decayed_counts(
     )
 
 
-def streaming_user_totals_tws(events_stream: DataFrame) -> DataFrame:
-    """Twin of :func:`streaming_user_totals` on the Spark 4
-    ``transformWithStateInPandas`` API (StatefulProcessor + typed state
-    handles) — the successor to ``applyInPandasWithState`` with
-    composable state variables, timers, and TTL. Same contract: per-user
-    running (n_events, sum_value), re-emitted on every update.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``RocksDBStateStoreProvider``) — transformWithState's state layout
-    is RocksDB-only; the test sets the conf before starting the query.
-    ENVIRONMENT GATE: the TWS python runner imports google.protobuf at
-    query start; in containers without protobuf the query fails with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE and the pytest is
-    skipped (``applyInPandasWithState`` twin covers the contract there).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, s double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = (
-                tuple(self._totals.get())
-                if self._totals.exists()
-                else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_UserTotals(),
-            outputStructType="user_id long, n_events long, sum_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def resample_gapfill(
     events: DataFrame,
     interval_sec: int = 3600,

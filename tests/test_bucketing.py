@@ -45,7 +45,7 @@ def bucketed_tables(spark, sf_dir, tmp_path_factory):
 
 
 def test_cobucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
-    from clinical_vector_search_spark.io.tables import read_bucketed, read_table
+    from clinical_vector_search_spark.io.tables import read_table
 
     ob, cb = bucketed_tables
     # At sf0.01 both tables are far below the 10MB broadcast threshold, so
@@ -56,9 +56,7 @@ def test_cobucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = read_bucketed(spark, ob).join(
-            read_bucketed(spark, cb), "o_custkey"
-        )
+        joined = spark.table(ob).join(spark.table(cb), "o_custkey")
         plan = _formatted(joined)
         assert "SortMergeJoin" in plan, plan
         assert "BroadcastHashJoin" not in plan, plan
@@ -84,11 +82,9 @@ def test_cobucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
 
 
 def test_bucket_key_groupby_has_no_exchange(spark, bucketed_tables):
-    from clinical_vector_search_spark.io.tables import read_bucketed
-
     ob, _ = bucketed_tables
     agg = (
-        read_bucketed(spark, ob)
+        spark.table(ob)
         .groupBy("o_custkey")
         .agg(F.sum("o_totalprice").alias("s"), F.count("*").alias("n"))
     )
@@ -99,10 +95,10 @@ def test_bucket_key_groupby_has_no_exchange(spark, bucketed_tables):
 
 
 def test_bucketed_roundtrip_values(spark, sf_dir, bucketed_tables):
-    from clinical_vector_search_spark.io.tables import read_bucketed, read_table
+    from clinical_vector_search_spark.io.tables import read_table
 
     ob, _ = bucketed_tables
-    got = read_bucketed(spark, ob).agg(
+    got = spark.table(ob).agg(
         F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("s")
     ).collect()[0]
     want = read_table(spark, sf_dir, "orders").agg(

@@ -517,13 +517,15 @@ def test_dedup_groups_incremental_random_merge_topologies(spark):
 
 
 def test_streaming_neardup_ingest_matches_one_shot(spark, sf_dir, tmp_path):
-    """Replaying the corpus through streaming_neardup_ingest in 4
-    micro-batches (maxFilesPerTrigger=1) accumulates exactly the pair
-    set of a one-shot minhash_candidate_pairs run — every pair lands
-    once, in the batch of whichever doc arrives later."""
+    """Replaying the corpus through streaming_index_ingest over
+    ingest_neardup_batch in 4 micro-batches (maxFilesPerTrigger=1)
+    accumulates exactly the pair set of a one-shot
+    minhash_candidate_pairs run — every pair lands once, in the batch
+    of whichever doc arrives later."""
+    from clinical_vector_search_spark.io.tables import streaming_index_ingest
     from clinical_vector_search_spark.operators.dedup import (
+        ingest_neardup_batch,
         read_neardup_output,
-        streaming_neardup_ingest,
     )
 
     docs = (
@@ -538,14 +540,12 @@ def test_streaming_neardup_ingest_matches_one_shot(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(docs_path)
     )
-    q = streaming_neardup_ingest(
-        spark,
+    q = streaming_index_ingest(
         stream,
-        str(tmp_path / "index"),
-        str(tmp_path / "pairs"),
-        4,
-        2,
-        3,
+        lambda df, bid, rid: ingest_neardup_batch(
+            spark, df, bid, str(tmp_path / "index"), str(tmp_path / "pairs"),
+            4, 2, 3, run_id=rid,
+        ),
         checkpoint_path=str(tmp_path / "ckpt"),
     )
     assert q.awaitTermination(300)

@@ -588,75 +588,6 @@ def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert sum(got.values()) == 35
 
 
-def test_streaming_user_totals_tws(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas twin (Spark 4 StatefulProcessor) must
-    match batch totals, like the applyInPandasWithState path. GATED: the
-    TWS driver worker requires google.protobuf, absent in this
-    container — the operator is exercised wherever protobuf exists."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState python runner needs protobuf",
-    )
-    from clinical_vector_search_spark.streaming.events import (
-        streaming_user_totals_tws,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    src = str(tmp_path / "tws_src")
-    ev = read_events(spark, sf_dir).select("user_id", "value").limit(2000).cache()
-    ev.write.mode("overwrite").parquet(src)
-    stream_in = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    q = (
-        streaming_user_totals_tws(stream_in)
-        .writeStream.format("memory")
-        .queryName("tws_totals_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.user_id: (r.n_events, round(r.sum_value, 6))
-           for r in spark.sql("SELECT * FROM tws_totals_test").collect()}
-    expect = {r.user_id: (r.n, round(r.s, 6))
-              for r in ev.groupBy("user_id")
-              .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-              .collect()}
-    assert got == expect
-
-
-def test_streaming_tws_plan_constructs_without_protobuf(
-    spark, sf_dir, tmp_path
-):
-    """The transformWithStateInPandas operator BUILDS (analyzed
-    streaming plan, correct output schema) in this container — the
-    protobuf gate is confined to the runner import at query START
-    (pyspark/sql/streaming/proto/StateMessage_pb2 → google.protobuf),
-    which the gated end-to-end test above exercises wherever the dep
-    exists. This pins that our side of the TWS surface is sound and
-    the only missing piece is the environment dependency."""
-    from clinical_vector_search_spark.streaming.events import (
-        streaming_user_totals_tws,
-    )
-
-    src = str(tmp_path / "tws_plan_src")
-    ev = read_events(spark, sf_dir).select("user_id", "value").limit(100)
-    ev.write.mode("overwrite").parquet(src)
-    stream_in = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    out = streaming_user_totals_tws(stream_in)
-    assert out.isStreaming
-    assert out.schema.simpleString() == (
-        "struct<user_id:bigint,n_events:bigint,sum_value:double>"
-    )
-
-
 def test_streaming_outer_join_parity_and_trap(spark, sf_dir):
     """LEFT OUTER stream-stream interval join vs the batch LEFT JOIN:
     exact set parity, explicitly including the trap rows — view-less

@@ -279,18 +279,50 @@ def test_plot_metrics_gated(spark, tmp_path):
         assert paths == []  # gated cleanly
 
 
-def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
-    from clinical_vector_search_spark.io.tables import read_jsonl, write_jsonl
+def test_run_write_jobs_threads_keep_caller_job_labels(spark):
+    """Jobs submitted from run_write_jobs' pool threads carry the caller's
+    job group, description and tags, so the event log attributes them and
+    cancelJobGroup reaches them; and each thread gets its own copy of the
+    properties, so a key one job sets does not leak into its sibling."""
+    import threading
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    path = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, path)
-    back = read_jsonl(spark, path, schema=docs.schema)
-    a = {r.doc_id: (r.text, r.lang) for r in docs.collect()}
-    b = {r.doc_id: (r.text, r.lang) for r in back.collect()}
-    assert a == b
+    from clinical_vector_search_spark.io.tables import run_write_jobs
+
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=60)
+    seen = {}
+    lock = threading.Lock()
+
+    def thunk(name):
+        def run():
+            sc.setLocalProperty("rwj.own", name)
+            both_set.wait()
+            spark.range(3).count()
+            with lock:
+                seen[name] = (
+                    sc.getLocalProperty("spark.jobGroup.id"),
+                    sc.getLocalProperty("spark.job.description"),
+                    sorted(spark.getTags()),
+                    sc.getLocalProperty("rwj.own"),
+                )
+        return run
+
+    sc.setJobGroup("rwj-group", "rwj-desc")
+    spark.addTag("rwj-tag")
+    try:
+        run_write_jobs(thunk("a"), thunk("b"))
+        assert seen == {
+            n: ("rwj-group", "rwj-desc", ["rwj-tag"], n) for n in "ab"
+        }
+        assert len(sc.statusTracker().getJobIdsForGroup("rwj-group")) >= 2
+    finally:
+        for prop in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(prop, None)
+        spark.clearTags()
 
 
 def test_upsert_vector_index_latest_wins(spark, tmp_path):

@@ -33,6 +33,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from clinical_vector_search_spark.io.tables import streaming_index_ingest
+
 _slow = settings(
     max_examples=6,
     deadline=None,
@@ -60,7 +62,6 @@ class IndexKit:
     snap: Callable         # (DataFrame) -> sorted comparable list
     compact_dirs: Callable  # (base) -> [dirs for compact_batched]
     tombstoned: Callable   # (base) -> (data_path, tombstone_path, join col)
-    stream_ingest: Callable  # (spark, stream, base, ckpt, run_id) -> query
     stream_check_dir: Callable  # (base) -> dir holding batch-{run}- subdirs
 
 
@@ -110,7 +111,6 @@ def _bm25_kit() -> IndexKit:
         bm25_index_add,
         bm25_index_delete,
         bm25_read_index,
-        streaming_bm25_ingest,
     )
 
     return IndexKit(
@@ -136,17 +136,12 @@ def _bm25_kit() -> IndexKit:
             f"{base}/postings", f"{base}/df", f"{base}/scalars"
         ],
         tombstoned=lambda base: (f"{base}/postings", f"{base}/deleted", "doc"),
-        stream_ingest=lambda spark, stream, base, ckpt, run_id:
-            streaming_bm25_ingest(
-                spark, stream, base, checkpoint_path=ckpt, run_id=run_id
-            ),
         stream_check_dir=lambda base: f"{base}/postings",
     )
 
 
 def _tfidf_kit() -> IndexKit:
     from clinical_vector_search_spark.operators.sparse import (
-        streaming_tfidf_ingest,
         tfidf_index,
         tfidf_index_add,
         tfidf_index_delete,
@@ -173,10 +168,6 @@ def _tfidf_kit() -> IndexKit:
             f"{base}/postings", f"{base}/df", f"{base}/scalars"
         ],
         tombstoned=lambda base: (f"{base}/postings", f"{base}/deleted", "doc"),
-        stream_ingest=lambda spark, stream, base, ckpt, run_id:
-            streaming_tfidf_ingest(
-                spark, stream, base, checkpoint_path=ckpt, run_id=run_id
-            ),
         stream_check_dir=lambda base: f"{base}/postings",
     )
 
@@ -188,7 +179,6 @@ def _ivfpq_kit() -> IndexKit:
         ivfpq_index_delete,
         pq_codebooks_lcg,
         read_ivfpq_index,
-        streaming_ivfpq_ingest,
     )
 
     books = pq_codebooks_lcg(8, 2, 4)
@@ -218,11 +208,6 @@ def _ivfpq_kit() -> IndexKit:
         ),
         compact_dirs=lambda base: [f"{base}/codes"],
         tombstoned=lambda base: (f"{base}/codes", f"{base}/dead", "vec_id"),
-        stream_ingest=lambda spark, stream, base, ckpt, run_id:
-            streaming_ivfpq_ingest(
-                spark, stream, f"{base}/codes", 8, books, n_centroids=2,
-                checkpoint_path=ckpt, run_id=run_id,
-            ),
         stream_check_dir=lambda base: f"{base}/codes",
     )
 
@@ -231,7 +216,6 @@ def _trigram_kit() -> IndexKit:
     # the r14 fourth index — written AFTER the suite, proving the
     # "one kit = the full ladder" claim this file exists to make
     from clinical_vector_search_spark.operators.sparse import (
-        streaming_trigram_ingest,
         trigram_index_add,
         trigram_index_delete,
         trigram_postings,
@@ -255,10 +239,6 @@ def _trigram_kit() -> IndexKit:
         ),
         compact_dirs=lambda base: [f"{base}/postings"],
         tombstoned=lambda base: (f"{base}/postings", f"{base}/deleted", "doc"),
-        stream_ingest=lambda spark, stream, base, ckpt, run_id:
-            streaming_trigram_ingest(
-                spark, stream, base, checkpoint_path=ckpt, run_id=run_id
-            ),
         stream_check_dir=lambda base: f"{base}/postings",
     )
 
@@ -275,7 +255,6 @@ def _semantic_kit() -> IndexKit:
         semantic_index_add,
         semantic_index_delete,
         semantic_read_index,
-        streaming_semantic_ingest,
     )
 
     def _add(spark, df, b, base, run_id=None):
@@ -303,12 +282,6 @@ def _semantic_kit() -> IndexKit:
         ),
         compact_dirs=lambda base: [f"{base}/assign"],
         tombstoned=lambda base: (f"{base}/assign", f"{base}/dead", "vec_id"),
-        stream_ingest=lambda spark, stream, base, ckpt, run_id:
-            streaming_semantic_ingest(
-                spark, stream, f"{base}/assign", f"{base}/pairs", 8,
-                n_clusters=2, tombstone_path=f"{base}/dead",
-                checkpoint_path=ckpt, run_id=run_id,
-            ),
         stream_check_dir=lambda base: f"{base}/assign",
     )
 
@@ -437,8 +410,9 @@ def test_tombstone_compaction_physically_erases(spark, kit, tmp_path):
 
 
 def test_streaming_ingest_matches_one_shot(spark, kit, tmp_path):
-    """Replaying the corpus through the kit's streaming ingest in
-    micro-batches (maxFilesPerTrigger=1, availableNow) accumulates
+    """Replaying the corpus through ``streaming_index_ingest`` over the
+    kit's batch add in micro-batches (maxFilesPerTrigger=1,
+    availableNow) accumulates
     state whose reconstructed view is value-identical to the one-shot
     rebuild — chunking must not matter — and the run_id namespaces the
     batch subdirectories (streaming batch ids are unique only per
@@ -452,8 +426,11 @@ def test_streaming_ingest_matches_one_shot(spark, kit, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(docs_path)
     )
-    q = kit.stream_ingest(
-        spark, stream, base, str(tmp_path / "ckpt"), "day1"
+    q = streaming_index_ingest(
+        stream,
+        lambda df, bid, rid: kit.add(spark, df, bid, base, run_id=rid),
+        str(tmp_path / "ckpt"),
+        "day1",
     )
     assert q.awaitTermination(300)
     assert len(q.recentProgress) > 1  # >1 micro-batch actually ran
@@ -463,6 +440,22 @@ def test_streaming_ingest_matches_one_shot(spark, kit, tmp_path):
         d.startswith("batch-day1-")
         for d in os.listdir(kit.stream_check_dir(base))
     )
+
+
+def test_streaming_ingest_validates_run_id_before_start(spark, tmp_path):
+    """An unsafe run_id is refused BEFORE the stream starts: no query is
+    left running and the batch add never sees a batch."""
+    src = str(tmp_path / "src")
+    _text_corpus(spark).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    calls = []
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="run_id"):
+        streaming_index_ingest(
+            stream, lambda *a: calls.append(a), str(tmp_path / "ckpt"), "a/b"
+        )
+    assert [q for q in spark.streams.active if q.id not in before] == []
+    assert calls == []
 
 
 @_slow

@@ -26,10 +26,10 @@ from clinical_vector_search_spark.operators.dedup import (
     semantic_index_add,
     semantic_index_delete,
     semantic_read_index,
-    streaming_semantic_ingest,
     write_semantic_state,
 )
 from clinical_vector_search_spark.functions import vector as V
+from clinical_vector_search_spark.io.tables import streaming_index_ingest
 
 
 def _blob_frame(spark, n_blobs=6, per_blob=40, dim=16, noise=0.22, seed=11):
@@ -259,10 +259,14 @@ def test_streaming_semantic_ingest_pairs_match_one_shot(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = streaming_semantic_ingest(
-        spark, stream, f"{base}/assign", f"{base}/pairs", 8,
-        threshold=0.6, n_clusters=3,
-        checkpoint_path=str(tmp_path / "ckpt"), run_id="day1",
+    q = streaming_index_ingest(
+        stream,
+        lambda df, bid, rid: ingest_semantic_batch(
+            spark, df, bid, f"{base}/assign", f"{base}/pairs", 8,
+            threshold=0.6, n_clusters=3, run_id=rid,
+        ),
+        str(tmp_path / "ckpt"),
+        "day1",
     )
     assert q.awaitTermination(300)
     assert len(q.recentProgress) > 1

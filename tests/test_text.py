@@ -210,23 +210,6 @@ def test_repetition_signals_handcrafted(spark):
     r4 = got[4]
     assert r4.top_2gram_frac == 0.6 and r4.top_3gram_frac == 0.5
 
-def test_chunk_udtf_parity_with_expression_chunker(spark, sf_dir):
-    """The Python UDTF chunker must match the expression chunk_rows
-    bit-for-bit on the real documents table (size 64 / overlap 16)."""
-    from clinical_vector_search_spark.functions.text import chunk_rows
-    from clinical_vector_search_spark.functions.udtf import chunk_rows_udtf
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    want = sorted(
-        (r.doc_id, r.chunk_seq, r.chunk_text, r.n_tokens)
-        for r in chunk_rows(docs, 64, 16).collect()
-    )
-    got = sorted(
-        (r.doc_id, r.chunk_seq, r.chunk_text, r.n_tokens)
-        for r in chunk_rows_udtf(spark, docs).collect()
-    )
-    assert got == want and len(got) > 0
-
 def test_cms_overestimates_never_under(spark, sf_dir):
     """CMS bound: est >= true for every term; exact when no row collides."""
     from clinical_vector_search_spark.functions.text import tokenize

@@ -5,13 +5,13 @@ Usage: python tools/profile_family.py <family> [family ...] [--reps N]
 Runs each family from bench.families exactly like bench.py (same session
 config, same noop materialization, state prebuild and warmup first),
 labelling every rep with a job description, then parses the event log
-to print per-job and per-stage durations — the local stand-in for the
-Spark UI's stage table (optimization guide §1.1/§7.1).
+with perfbench's parser to print per-job durations and per-stage tasks,
+task time and CPU time — the local stand-in for the Spark UI's stage
+table (optimization guide §1.1/§7.1).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
@@ -30,6 +30,7 @@ evdir = tempfile.mkdtemp(prefix="cvs_evlog_")
 
 import bench
 from clinical_vector_search_spark.session import get_spark
+from perfbench.layers import event_files, parse_event_log
 
 spark = get_spark(
     "cvs-spark-profile",
@@ -66,78 +67,25 @@ for name in args:
 spark.stop()
 
 # ---- parse the event log ----
-logf = None
-for root, _dirs, files in os.walk(evdir):
-    for f in files:
-        if f.startswith("events_"):
-            logf = os.path.join(root, f)
-assert logf, f"no event log in {evdir}"
-
-
-def _open(path):
-    if path.endswith(".zstd"):
-        import zstandard
-
-        fh = zstandard.ZstdDecompressor().stream_reader(open(path, "rb"))
-        import io as _io
-
-        return _io.TextIOWrapper(fh)
-    return open(path)
-
-jobs: dict[int, dict] = {}
-stages: dict[int, dict] = {}
-for line in _open(logf):
-    try:
-        ev = json.loads(line)
-    except json.JSONDecodeError:
-        continue
-    e = ev.get("Event")
-    if e == "SparkListenerJobStart":
-        jid = ev["Job ID"]
-        jobs[jid] = {
-            "desc": ev.get("Properties", {}).get(
-                "spark.job.description", ""
-            ),
-            "t0": ev["Submission Time"],
-            "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-        }
-    elif e == "SparkListenerJobEnd":
-        jid = ev["Job ID"]
-        if jid in jobs:
-            jobs[jid]["t1"] = ev["Completion Time"]
-    elif e == "SparkListenerStageCompleted":
-        si = ev["Stage Info"]
-        sid = si["Stage ID"]
-        stages[sid] = {
-            "name": si.get("Stage Name", "")[:60],
-            "dur": (si.get("Completion Time", 0)
-                    - si.get("Submission Time", 0)) / 1000.0,
-            "tasks": si.get("Number of Tasks"),
-        }
+jobs, stages = parse_event_log(event_files(evdir))
+assert jobs, f"no event log in {evdir}"
 
 per_desc: dict[str, list] = {}
 for jid in sorted(jobs):
     j = jobs[jid]
-    if "t1" not in j:
-        continue
-    per_desc.setdefault(j["desc"], []).append((jid, j))
+    if j.end:
+        per_desc.setdefault(j.description or "", []).append(j)
 
 for desc, js in per_desc.items():
     if "|rep" not in desc and "|warmup" not in desc:
         continue
-    tot = sum(j["t1"] - j["t0"] for _, j in js) / 1000.0
-    t_first = min(j["t0"] for _, j in js)
-    t_last = max(j["t1"] for _, j in js)
-    span = (t_last - t_first) / 1000.0
+    tot = sum(j.end - j.submit for j in js)
+    span = max(j.end for j in js) - min(j.submit for j in js)
     print(f"\n== {desc}: {len(js)} jobs, sum {tot:.3f}s, span {span:.3f}s")
-    for jid, j in js:
-        d = (j["t1"] - j["t0"]) / 1000.0
-        ss = [
-            (sid, stages.get(sid)) for sid in j["stages"]
-            if sid in stages
-        ]
+    for j in js:
         stage_str = "; ".join(
-            f"s{sid} {info['dur']:.2f}s/{info['tasks']}t {info['name']}"
-            for sid, info in ss
+            f"s{sid} {st.tasks}t run {st.run_s:.2f}s cpu {st.cpu_s:.2f}s"
+            for sid in j.stages
+            if (st := stages.get(sid))
         )
-        print(f"  job {jid}: {d:6.3f}s  [{stage_str}]")
+        print(f"  job {j.job_id}: {j.end - j.submit:6.3f}s  [{stage_str}]")
