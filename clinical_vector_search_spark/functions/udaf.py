@@ -23,9 +23,10 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 
-@pandas_udf("double")
+@pandas_udf(DoubleType())
 def softclip(v: pd.Series) -> pd.Series:
     """Scalar vectorized UDF: x / (1 + |x|) — a smooth squash to (-1, 1)
     (feature normalization for heavy-tailed metrics). Pure pandas
@@ -33,7 +34,7 @@ def softclip(v: pd.Series) -> pd.Series:
     return v / (1.0 + v.abs())
 
 
-@pandas_udf("double")
+@pandas_udf(DoubleType())
 def weighted_mean(v: pd.Series, w: pd.Series) -> float:
     """Grouped-agg vectorized UDF: Σ(v·w)/Σ(w) per group (NULL weight ⇒
     pair excluded, matching the SQL twin). Returns NULL when the group's

@@ -146,13 +146,11 @@ def upsert_vector_index(
     between the two renames there is a brief window with NO directory
     at ``path`` — a concurrent reader mid-swap fails, and a crash
     inside the window leaves the data in ``<path>__old_<tag>``, which
-    the next read or compaction renames back automatically
+    the next read, ingest or compaction renames back automatically
     (:func:`recover_interrupted_swap`); see :func:`_swap_directories`,
     which also carries the object-store caveat (rename is copy+delete
     there — prefer a versioned-directory + pointer-file layout)."""
     import uuid
-
-    from pyspark.sql import Window
 
     # lease FIRST: spark.read.parquet eagerly snapshots the file
     # listing, so a pre-lease snapshot races a concurrent upsert/
@@ -524,8 +522,9 @@ def _swap_directories(spark: SparkSession, path: str, tmp: str, tag: str):
     crash leaves either the old or the new directory recoverable, never
     neither (though between the two renames the live NAME is briefly
     absent — the documented mid-swap window; a crash inside it leaves
-    the data in ``<path>__old_<tag>``, and the next read or compaction
-    SELF-HEALS by renaming it back — :func:`recover_interrupted_swap`).
+    the data in ``<path>__old_<tag>``, and the next read, ingest or
+    compaction SELF-HEALS by renaming it back —
+    :func:`recover_interrupted_swap`).
     Single-writer, enforced by :func:`compaction_lease` in every caller.
     Rename is atomic-enough on local/HDFS; object stores implement it
     as copy+delete — there, prefer a versioned-directory + pointer-file
@@ -539,7 +538,7 @@ def _swap_directories(spark: SparkSession, path: str, tmp: str, tag: str):
         raise IOError(
             f"swap failed mid-window: {path!r} is absent; its data is "
             f"intact at {old!r} and the new copy at {tmp!r} — the next "
-            "read or compaction of this path self-heals by renaming "
+            "read, ingest or compaction of this path self-heals by renaming "
             f"{old!r} back (recover_interrupted_swap)"
         )
     fs.delete(P(old), True)
@@ -715,9 +714,12 @@ def recover_interrupted_swap(
 
     A crash between the swap's two renames leaves the live NAME absent
     with the data intact at ``<path>__old_<tag>`` — previously a manual
-    rename. This preamble, shared by the serving readers
-    (``pq.read_ivfpq_index``, ``bm25.bm25_read_index``) and every
-    compactor/upserter, restores it automatically:
+    rename. This preamble restores it automatically. Its callers: the
+    two protocol halves every maintained-index kit goes through —
+    :func:`read_batches` (every index read) and :func:`open_batch`
+    (every batch ingest, before it writes ``<path>/<batch>`` and so
+    recreates the live name) — plus :func:`read_sidecar` and every
+    compactor/upserter (``deep=True``, under the lease):
 
     - live path present: nothing to heal (the fast read path is one
       ``fs.exists``). With ``deep=True`` (compactors, which already
@@ -1155,7 +1157,7 @@ def validate_run_id(run_id) -> None:
     the entry hidden to parquet readers and to the fence listing — both
     silently reopen the double-count hole the fence exists to close.
     Allowed: ``[A-Za-z0-9-][A-Za-z0-9_-]*`` (or None). Shared by every
-    batch-id-overwrite maintained sink (near-dup, BM25, IVF-PQ)."""
+    batch-id-overwrite maintained sink (through :func:`open_batch`)."""
     import re
 
     if run_id is None:
@@ -1185,7 +1187,8 @@ def guard_batch_not_compacted(path: str, subdir: str) -> None:
     at-least-once redelivery that can no
     longer be made idempotent (its rows live in the compacted flat
     files; a recreated subdirectory would double-count them). Called by
-    every batch-id-overwrite sink before writing.
+    :func:`open_batch` for every batch-id-overwrite sink before it runs
+    a job.
 
     Also refuses while ``path``'s COMPACTION LEASE is held (r13,
     :func:`guard_no_compaction_in_flight`): a batch subdirectory
@@ -1264,6 +1267,142 @@ def guard_no_compaction_in_flight(
             f"was hard-killed, remove the lease file. "
             f"{_render_state(spark, path)}"
         )
+
+
+# --- the maintained-index batch protocol, written once ----------------
+# Sink half: open_batch (before any job) + write_batch. Reader half:
+# read_batches (+ fence_redeletes for the replayed-text delete sinks).
+# Every kit's add/delete/read calls these and spells out no step itself.
+
+
+def open_batch(
+    spark: SparkSession, prefix: str, run_id, batch_id, dirs: list[str]
+) -> str:
+    """Sink half, step 1 — call before the batch runs any job: validate
+    ``run_id`` and name the batch subdirectory (:func:`batch_subdir`;
+    ``run_id`` namespaces a new streaming query/checkpoint), then for
+    each target directory self-heal a crashed swap
+    (:func:`recover_interrupted_swap`) and refuse a held lease or a
+    batch a compaction already folded (:func:`guard_batch_not_compacted`
+    — batch-id overwrite is idempotent only UP TO the last compaction).
+    The heal comes first: writing ``dir/<sub>`` while the swap's data
+    sits at ``dir__old_<tag>`` recreates the live name, readers then
+    see a live path and never heal, and the next deep compaction
+    deletes the stranded rows. Returns the subdirectory name."""
+    sub = batch_subdir(prefix, run_id, batch_id)
+    for d in dirs:
+        recover_interrupted_swap(spark, d)
+        guard_batch_not_compacted(d, sub)
+    return sub
+
+
+def write_batch(
+    spark: SparkSession, sub: str, outputs: dict, ordered: bool = False
+) -> None:
+    """Sink half, step 2: announce :func:`ingest_markers` on every
+    target directory and OVERWRITE each ``{dir: frame}`` output at
+    ``dir/<sub>`` — batch-id overwrite is what makes at-least-once
+    retries bit-identical. The writes run concurrently
+    (:func:`run_write_jobs`); ``ordered=True`` runs them one after
+    another in dict order, for an output whose plan scans another
+    target (the pair probes read the index this batch also writes: a
+    retry's concurrent overwrite of ``index/<sub>`` would delete files
+    the probe is reading)."""
+    jobs = [
+        lambda d=d, df=df: df.write.mode("overwrite").parquet(f"{d}/{sub}")
+        for d, df in outputs.items()
+    ]
+    with ingest_markers(spark, list(outputs)):
+        if ordered:
+            for job in jobs:
+                job()
+        else:
+            run_write_jobs(*jobs)
+
+
+def read_batches(
+    spark: SparkSession,
+    path: str,
+    schema: str | None = None,
+    tombstones: str | None = None,
+    key: str = "doc",
+    optional: bool = False,
+    skip_batch: str | None = None,
+) -> DataFrame | None:
+    """Reader half: self-heal a crashed swap, then list ``path``
+    recursively — the per-batch subdirectories plus the flat files a
+    compaction leaves. ``schema`` fixes the read schema for directories
+    with a fixed writer contract, skipping the per-file footer
+    inference that grows with the batch count. ``tombstones`` names a
+    delete directory whose ``key`` ids are dropped by a broadcast
+    anti-join (absent or empty: nothing is deleted; it must stay
+    broadcast-sized between ``compact_tombstoned`` runs). The one
+    absence rule: with ``optional=True`` a path that genuinely holds no
+    data (:func:`is_absence_error`) returns None; every other analysis
+    error propagates, because an empty substitute for an unreadable
+    index silently drops data.
+
+    ``skip_batch`` leaves out the rows of that batch subdirectory, by
+    each file's PARENT directory name (an exact match; substring
+    containment over the URI would also match an ancestor of that
+    name). A sink that anti-joins its output against the directory it
+    writes passes its own batch name, so a retry sees the directory as
+    its first attempt did instead of anti-joining itself away and
+    overwriting its own earlier output with nothing."""
+    from pyspark.errors import AnalysisException
+
+    recover_interrupted_swap(spark, path)
+    reader = spark.read.option("recursiveFileLookup", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
+    try:
+        df = reader.parquet(path)
+    except AnalysisException as e:
+        if optional and is_absence_error(e):
+            return None
+        raise
+    if skip_batch is not None:
+        parent = F.element_at(F.split(F.input_file_name(), "/"), -2)
+        df = df.filter(parent != skip_batch)
+    if tombstones is not None:
+        dead = read_batches(spark, tombstones, optional=True)
+        if dead is not None:
+            df = df.join(F.broadcast(dead.select(key)), key, "left_anti")
+    return df
+
+
+def fence_redeletes(
+    spark: SparkSession,
+    batch: DataFrame,
+    tombstones: str,
+    sub: str,
+    id_col: str,
+) -> DataFrame:
+    """The re-delete fence of the delete-by-replay sinks (BM25, TF-IDF):
+    drop the rows of ``batch`` whose id already has a ``doc`` tombstone
+    under ``tombstones`` — deleting a doc twice would subtract its stat
+    deltas twice. The batch's own ``sub`` tombstones are skipped
+    (``read_batches(skip_batch=)``), so a retry sees the index as its
+    first attempt did. Broadcast: the tombstone set is bounded by the
+    compaction cadence."""
+    dead = read_batches(spark, tombstones, optional=True, skip_batch=sub)
+    if dead is None:
+        return batch
+    already = dead.select(F.col("doc").alias(id_col))
+    return batch.join(F.broadcast(already), id_col, "left_anti")
+
+
+def read_sidecar(spark: SparkSession, index_path: str) -> bytes | None:
+    """The ``_TRAINED.json`` bytes :func:`publish_sidecar` installed in
+    ``index_path``, or None when it carries none. Self-heals a crashed
+    swap first: the sidecar lives inside the directory, so a bare
+    existence check would read a recoverable index as stateless."""
+    recover_interrupted_swap(spark, index_path)
+    jvm, fs, _ = _hadoop_fs(spark, index_path)
+    p = jvm.org.apache.hadoop.fs.Path(
+        f"{index_path.rstrip('/')}/{TRAINED_SIDECAR}"
+    )
+    return _read_small_file(fs, p) if fs.exists(p) else None
 
 
 def streaming_index_ingest(
@@ -1492,7 +1631,7 @@ def compact_tombstoned(
     untouched; DURING the swap the same mid-swap window as
     ``compact_parquet``/``upsert_vector_index`` applies (a crash between
     the two moves leaves ``data_path`` absent with the data intact at
-    ``__old_<tag>`` — the next read or compaction restores it via
+    ``__old_<tag>`` — the next read, ingest or compaction restores it via
     :func:`recover_interrupted_swap`); between swap and clear the stale
     tombstones anti-join against already-erased ids and match nothing,
     so re-running completes the clear. After the clear, a previously

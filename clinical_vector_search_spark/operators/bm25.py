@@ -306,24 +306,14 @@ def bm25_index_add(
       ``scalars/batch-N``   (n_docs, sum_dl)    — one exact-integer row.
 
     :func:`bm25_read_index` reconstructs the scoring view from these at
-    vocabulary granularity. Each batch OVERWRITES its own batch-id
-    subdirectories, so at-least-once retries leave the index
-    bit-identical (the ``ingest_neardup_batch`` discipline); compact
-    each subdirectory with ``io.tables.compact_batched`` on the usual
-    cadence. Idempotency holds UP TO the last compaction — redelivery
-    of a batch ``compact_batched`` already folded is refused loudly
-    (its df/scalar rows live in the compacted files and would be
-    double-counted into idf/avgdl). ``run_id`` namespaces the
-    subdirectory for ingestion from a NEW streaming query/checkpoint
-    (same contract as ``dedup.ingest_neardup_batch``)."""
-    from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-    )
+    vocabulary granularity. Storage (batch-id overwrite, compaction
+    fence, ``run_id``, markers) is the shared sink half,
+    ``io.tables.open_batch`` / ``write_batch``; compact each
+    subdirectory with ``io.tables.compact_batched``."""
+    from clinical_vector_search_spark.io.tables import open_batch, write_batch
 
-    bsub = batch_subdir("batch", run_id, batch_id)
-    for sub in ("postings", "df", "scalars"):
-        guard_batch_not_compacted(f"{index_path}/{sub}", bsub)
+    dirs = [f"{index_path}/{s}" for s in ("postings", "df", "scalars")]
+    bsub = open_batch(spark, "batch", run_id, batch_id, dirs)
     toks = new_docs.select(
         F.col(id_col).alias("doc"), TXT.tokenize(text_col).alias("tokens")
     ).localCheckpoint()  # consumed by postings, df and scalars
@@ -344,28 +334,9 @@ def bm25_index_add(
     scalars = doclens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    from clinical_vector_search_spark.io.tables import (
-        ingest_markers,
-        run_write_jobs,
-    )
-
-    with ingest_markers(
-        spark, [f"{index_path}/{s}" for s in ("postings", "df", "scalars")]
-    ):
-        # three INDEPENDENT outputs of the one checkpointed toks frame —
-        # submitted concurrently so the cluster is never idle in a
-        # write's tail (guide §2.6; sequential they serialize 3 jobs)
-        run_write_jobs(
-            lambda: postings.write.mode("overwrite").parquet(
-                f"{index_path}/postings/{bsub}"
-            ),
-            lambda: dfreq.write.mode("overwrite").parquet(
-                f"{index_path}/df/{bsub}"
-            ),
-            lambda: scalars.write.mode("overwrite").parquet(
-                f"{index_path}/scalars/{bsub}"
-            ),
-        )
+    # three INDEPENDENT outputs of the one checkpointed toks frame,
+    # written concurrently (guide §2.6)
+    write_batch(spark, bsub, dict(zip(dirs, (postings, dfreq, scalars))))
 
 
 def bm25_read_index(spark, index_path: str) -> DataFrame:
@@ -387,52 +358,29 @@ def bm25_read_index(spark, index_path: str) -> DataFrame:
     tombstones are broadcast — they must stay broadcast-sized between
     ``compact_tombstoned`` runs (same caveat as compact_tombstoned's
     own broadcast of dead ids; compaction cadence bounds the set).
+    Every directory is read through the shared reader half
+    (``io.tables.read_batches``: swap self-heal, recursive listing);
+    df/ and scalars/ have a FIXED writer contract, so they are read
+    with a fixed schema, while postings/ and deleted/ carry the
+    caller's id type and keep inference."""
+    from clinical_vector_search_spark.io.tables import read_batches
 
-    Each stat directory self-heals the compactor's mid-swap crash
-    window before its scan (``io.tables.recover_interrupted_swap``): a
-    crashed ``compact_batched`` that left e.g. ``postings/`` absent
-    with the data at ``postings__old_<tag>`` is renamed back instead of
-    failing the read."""
-
-    from pyspark.errors import AnalysisException
-
-    from clinical_vector_search_spark.io.tables import (
-        is_absence_error,
-        recover_interrupted_swap,
+    postings = read_batches(
+        spark, f"{index_path}/postings", tombstones=f"{index_path}/deleted"
     )
-
-    def rec(sub: str, schema: str | None = None) -> DataFrame:
-        recover_interrupted_swap(spark, f"{index_path}/{sub}")
-        reader = spark.read.option("recursiveFileLookup", "true")
-        if schema is not None:
-            # df/ and scalars/ have a FIXED writer contract (bm25_index_
-            # add/_delete always emit these exact types), so the reader
-            # skips the per-file footer-inference pass — which otherwise
-            # grows with the number of per-batch files between
-            # compactions. postings/ and deleted/ carry the caller's id
-            # type and keep inference.
-            reader = reader.schema(schema)
-        return reader.parquet(f"{index_path}/{sub}")
-
-    postings = rec("postings")
-    try:  # bm25_index_delete tombstones — tiny, broadcast anti-join
-        postings = postings.join(
-            F.broadcast(rec("deleted")), "doc", "left_anti"
-        )
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
     # fold add AND delete deltas; a term whose df reaches 0 has no live
     # postings and must leave the vocabulary, or the epsilon floor's
     # avg(raw_idf) would include phantom terms a true rebuild never sees
     dfreq = (
-        rec("df", "term string, df long")
+        read_batches(spark, f"{index_path}/df", "term string, df long")
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
         .filter(F.col("df") > 0)
     )
     stats = (
-        rec("scalars", "n_docs long, sum_dl long")
+        read_batches(
+            spark, f"{index_path}/scalars", "n_docs long, sum_dl long"
+        )
         .agg(
             F.sum("n_docs").alias("_n"),
             F.sum("sum_dl").alias("_sdl"),
@@ -475,59 +423,33 @@ def bm25_index_delete(
     (tests/test_bm25.py). Physical erasure of tombstoned postings
     happens at the next compaction (rewrite minus tombstones, then
     clear ``deleted/``), exactly like ``pq.ivfpq_index_delete``.
-    Idempotent THREE ways: (a) each delete batch overwrites its own
-    ``del-{id}`` subdirectories, so at-least-once retries are
-    bit-identical — up to the last ``compact_batched`` over the stat
-    directories, after which redelivery is refused (a recreated del
-    subdirectory would double-SUBTRACT the folded negative deltas);
+    Idempotent THREE ways: (a) batch-id overwrite of its own
+    ``del-{id}`` subdirectories (the shared sink half; a redelivery
+    after ``compact_batched`` is refused — it would double-SUBTRACT);
     (b) re-deleting an ALREADY-DELETED doc under a fresh batch id is a
     no-op, not a silent double-subtract: the batch is anti-joined
     against the existing ``deleted/`` tombstones (broadcast — the
     accumulated tombstone set since the last ``compact_tombstoned``,
     which must therefore stay broadcast-sized between compactions,
-    the same caveat as compact_tombstoned's broadcast of dead ids;
-    compaction cadence bounds it. The IVF-PQ side gets the fence for
-    free because its tombstones are a distinct-id set; the BM25 side
-    replays text, so without the fence the df/n_docs/sum_dl deltas of
-    a twice-deleted doc would drift idf/avgdl for every query). The retry case survives the
-    fence because the batch's OWN ``del-{id}`` tombstones are excluded
-    from the anti-join side (``input_file_name`` filter — a retry must
-    see the index as the first attempt did, not anti-join itself away
-    into empty deltas); (c) duplicate rows of one doc WITHIN a batch
+    compaction cadence bounds it; without the fence the df/n_docs/
+    sum_dl deltas of a twice-deleted doc would drift idf/avgdl — see
+    ``io.tables.fence_redeletes``, which also keeps a retry from
+    anti-joining itself away); (c) duplicate rows of one doc WITHIN a batch
     collapse to one. The one unfenceable window: after
     ``compact_tombstoned`` clears ``deleted/``, a replayed delete of a
     physically erased doc is indistinguishable from deleting a
     never-ingested doc — which the replay contract already forbids."""
-    from pyspark.errors import AnalysisException
-
     from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-        is_absence_error,
+        fence_redeletes,
+        open_batch,
+        write_batch,
     )
 
-    dsub = batch_subdir("del", run_id, batch_id)
-    for sub in ("df", "scalars", "deleted"):
-        guard_batch_not_compacted(f"{index_path}/{sub}", dsub)
-    batch = deleted_docs.dropDuplicates([id_col])
-    try:
-        already = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(f"{index_path}/deleted")
-            # exclude the batch's OWN tombstones by the file's immediate
-            # parent directory name — an exact match, not substring
-            # containment over the full URI, which would also match any
-            # ANCESTOR directory that happens to be named dsub and
-            # silently disable the whole fence
-            .filter(
-                F.element_at(F.split(F.input_file_name(), "/"), -2) != dsub
-            )
-            .select(F.col("doc").alias(id_col))
-        )
-        batch = batch.join(F.broadcast(already), id_col, "left_anti")
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
+    dirs = [f"{index_path}/{s}" for s in ("df", "scalars", "deleted")]
+    dsub = open_batch(spark, "del", run_id, batch_id, dirs)
+    batch = fence_redeletes(
+        spark, deleted_docs.dropDuplicates([id_col]), dirs[2], dsub, id_col
+    )
     toks = batch.select(
         F.col(id_col).alias("doc"), TXT.tokenize(text_col).alias("tokens")
     ).localCheckpoint()  # consumed by df, scalars and tombstones
@@ -541,24 +463,4 @@ def bm25_index_delete(
         (-F.count("*")).alias("n_docs"), (-F.sum("dl")).alias("sum_dl")
     )
     tomb = toks.select("doc").distinct()
-    from clinical_vector_search_spark.io.tables import (
-        ingest_markers,
-        run_write_jobs,
-    )
-
-    with ingest_markers(
-        spark, [f"{index_path}/{s}" for s in ("df", "scalars", "deleted")]
-    ):
-        # independent outputs of the checkpointed toks — concurrent
-        # submission, same as bm25_index_add (guide §2.6)
-        run_write_jobs(
-            lambda: neg_df.write.mode("overwrite").parquet(
-                f"{index_path}/df/{dsub}"
-            ),
-            lambda: neg_scalars.write.mode("overwrite").parquet(
-                f"{index_path}/scalars/{dsub}"
-            ),
-            lambda: tomb.write.mode("overwrite").parquet(
-                f"{index_path}/deleted/{dsub}"
-            ),
-        )
+    write_batch(spark, dsub, dict(zip(dirs, (neg_df, neg_scalars, tomb))))

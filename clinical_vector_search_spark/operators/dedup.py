@@ -311,10 +311,12 @@ def read_neardup_output(spark, path: str) -> DataFrame:
     idempotent-retry layout), so a plain ``spark.read.parquet`` would
     not see the leaf files; the recursive listing also tolerates the
     mixed layout left by ``compact_parquet`` (flat compacted files next
-    to newer batch subdirectories). Raises like any parquet read if the
-    path does not exist — probe-or-empty callers use the try/except in
-    :func:`ingest_neardup_batch`."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(path)
+    to newer batch subdirectories), after self-healing a crashed swap —
+    the shared reader half, ``io.tables.read_batches``. Raises like any
+    parquet read if the path does not exist."""
+    from clinical_vector_search_spark.io.tables import read_batches
+
+    return read_batches(spark, path)
 
 
 def ingest_neardup_batch(
@@ -367,54 +369,35 @@ def ingest_neardup_batch(
     (``batch-{run_id}-{id}``): extending an existing index from a NEW
     query/checkpoint, pass a distinct run_id (e.g. the ingest date);
     retries and checkpoint-restarts of the SAME logical run must reuse
-    the same run_id so redelivery stays idempotent. Idempotency holds
-    UP TO the last ``io.tables.compact_batched`` — a redelivery of a
-    batch that compaction already folded is refused loudly (its rows
-    live in the compacted files; rewriting the subdirectory would
-    double-count them). Readers list recursively
-    (:func:`read_neardup_output`), which also accepts the mixed
-    compacted-flat + new-subdir layout. Single writer assumed, like the
-    other index-maintenance sinks in ``io.tables``; long-running
-    streams add one subdirectory per batch, so schedule
-    ``compact_batched`` over ``index_path`` on the usual cadence."""
-    from pyspark.errors import AnalysisException
-
+    the same run_id so redelivery stays idempotent. Storage — the
+    compaction fence, markers, recursive reads, and the rule that only
+    genuine absence of the index reads as "first batch" — is the shared
+    protocol (``io.tables.open_batch`` / ``read_batches`` /
+    ``write_batch``); schedule ``compact_batched`` over ``index_path``
+    on the usual cadence."""
     from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
+        open_batch,
+        read_batches,
+        write_batch,
     )
 
-    sub = batch_subdir("batch", run_id, batch_id)
-    guard_batch_not_compacted(pairs_path, sub)
-    guard_batch_not_compacted(index_path, sub)
+    sub = open_batch(
+        spark, "batch", run_id, batch_id, [pairs_path, index_path]
+    )
     sigs = minhash_signatures(
         batch_df, num_hashes, shingle_size, text_col, id_col
     )
     nb = minhash_band_buckets(sigs, rows_per_band, id_col).localCheckpoint()
-    try:
-        corpus = read_neardup_output(spark, index_path).select(
-            id_col, "band", "bucket"
-        )
-    except AnalysisException as e:
-        # ONLY genuine absence reads as "first batch" — any other
-        # analysis error (schema corruption, bad column set, access
-        # problems surfaced as AnalysisException) must propagate, or an
-        # empty-corpus substitute silently drops every new×old pair of
-        # this batch — the exact failure mode this try-read replaced
-        # os.walk to eliminate
-        from clinical_vector_search_spark.io.tables import is_absence_error
-
-        if not is_absence_error(e):
-            raise
-        corpus = spark.createDataFrame([], nb.schema)
+    corpus = read_batches(spark, index_path, optional=True)
+    corpus = (
+        spark.createDataFrame([], nb.schema)
+        if corpus is None
+        else corpus.select(id_col, "band", "bucket")
+    )
     pairs = _incremental_pairs_from_buckets(
         nb, corpus, id_col, materialized=True
     )
-    from clinical_vector_search_spark.io.tables import ingest_markers
-
-    with ingest_markers(spark, [pairs_path, index_path]):
-        pairs.write.mode("overwrite").parquet(f"{pairs_path}/{sub}")
-        nb.write.mode("overwrite").parquet(f"{index_path}/{sub}")
+    write_batch(spark, sub, {pairs_path: pairs, index_path: nb}, ordered=True)
 
 
 def span_dedup(
@@ -2242,22 +2225,15 @@ def semantic_index_add(
     restricted to batch rows — the oracle contract. ``encoder=None``
     dispatches expr/BLAS by cost (:func:`choose_semantic_encoder`);
     both are bit-identical. Read back with :func:`semantic_read_index`;
-    compact with ``io.tables.compact_batched`` on the usual cadence
-    (idempotency holds UP TO the last compaction — folded redeliveries
-    refuse loudly)."""
-    from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-        ingest_markers,
-    )
+    storage is the shared sink half (``io.tables.open_batch`` /
+    ``write_batch``)."""
+    from clinical_vector_search_spark.io.tables import open_batch, write_batch
 
-    bsub = batch_subdir("batch", run_id, batch_id)
-    guard_batch_not_compacted(index_path, bsub)
+    bsub = open_batch(spark, "batch", run_id, batch_id, [index_path])
     asg = _assignment_frame(
         new_vecs, dim, n_clusters, id_col, vec_col, centroids, encoder
     )
-    with ingest_markers(spark, [index_path]):
-        asg.write.mode("overwrite").parquet(f"{index_path}/{bsub}")
+    write_batch(spark, bsub, {index_path: asg})
 
 
 def semantic_index_delete(
@@ -2284,12 +2260,10 @@ def semantic_read_index(
     spark, index_path: str, tombstone_path: str | None = None,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Read a maintained semantic index: recursive listing over the
-    batch subdirectories (tolerating the post-compaction mixed layout),
-    broadcast tombstone anti-join, mid-swap self-heal first — the
-    protocol reader shared with ``pq.read_ivfpq_index`` (assignments
-    and codes tables have identical storage shape: per-doc rows keyed
-    by ``id_col``). Returns (id, _nv, cluster) rows."""
+    """Read a maintained semantic index through ``pq.read_ivfpq_index``
+    — the shared reader half (assignments and codes tables have
+    identical storage shape: per-doc rows keyed by ``id_col``). Returns
+    (id, _nv, cluster) rows."""
     from clinical_vector_search_spark.operators.pq import read_ivfpq_index
 
     return read_ivfpq_index(spark, index_path, tombstone_path, id_col)
@@ -2430,37 +2404,30 @@ def ingest_semantic_batch(
     corpus is chunked: each pair is emitted exactly once, in the batch
     of whichever member arrives later, so replaying any partitioning
     reproduces the one-shot :func:`semantic_dedup_pairs` output — the
-    oracle-checked contract. Index discovery is a try-read
-    (storage-agnostic); only genuine absence reads as 'first batch'."""
-    from pyspark.errors import AnalysisException
-
+    oracle-checked contract. Storage: the shared protocol halves, as in
+    :func:`ingest_neardup_batch`."""
     from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-        ingest_markers,
-        is_absence_error,
+        open_batch,
+        read_batches,
+        write_batch,
     )
 
-    sub = batch_subdir("batch", run_id, batch_id)
-    guard_batch_not_compacted(pairs_path, sub)
-    guard_batch_not_compacted(index_path, sub)
+    sub = open_batch(
+        spark, "batch", run_id, batch_id, [pairs_path, index_path]
+    )
     asg = _assignment_frame(
         batch_df, dim, n_clusters, id_col, vec_col, centroids, encoder
     ).localCheckpoint()
-    try:
-        corpus = semantic_read_index(
-            spark, index_path, tombstone_path, id_col
-        )
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
+    corpus = read_batches(
+        spark, index_path, tombstones=tombstone_path, key=id_col,
+        optional=True,
+    )
+    if corpus is None:
         corpus = spark.createDataFrame([], asg.schema)
     pairs = _incremental_pairs_from_assignments(
         asg, corpus, threshold, id_col, materialized=True
     )
-    with ingest_markers(spark, [pairs_path, index_path]):
-        pairs.write.mode("overwrite").parquet(f"{pairs_path}/{sub}")
-        asg.write.mode("overwrite").parquet(f"{index_path}/{sub}")
+    write_batch(spark, sub, {pairs_path: pairs, index_path: asg}, ordered=True)
 
 
 def reindex_semantic(
@@ -2580,32 +2547,24 @@ def backfill_semantic_pairs(
     history of whichever geometry each pair happened to ingest under.
     Run it right after :func:`reindex_semantic`, before the next
     ingest batch."""
-    from pyspark.errors import AnalysisException
-
     from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-        ingest_markers,
-        is_absence_error,
+        open_batch,
+        read_batches,
+        write_batch,
     )
 
-    sub = batch_subdir("backfill", run_id, batch_id)
-    guard_batch_not_compacted(pairs_path, sub)
+    sub = open_batch(spark, "backfill", run_id, batch_id, [pairs_path])
     asg = semantic_read_index(spark, index_path, tombstone_path, id_col)
     admitted = semantic_dedup_pairs(
         None, None, threshold, id_col=id_col, assigned=asg,
         max_cluster_rows=max_cluster_rows,
     )
-    try:
-        existing = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(pairs_path)
-            .select("a_id", "b_id")
+    existing = read_batches(spark, pairs_path, optional=True, skip_batch=sub)
+    new = (
+        admitted
+        if existing is None
+        else admitted.join(
+            existing.select("a_id", "b_id"), ["a_id", "b_id"], "left_anti"
         )
-        new = admitted.join(existing, ["a_id", "b_id"], "left_anti")
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
-        new = admitted
-    with ingest_markers(spark, [pairs_path]):
-        new.write.mode("overwrite").parquet(f"{pairs_path}/{sub}")
+    )
+    write_batch(spark, sub, {pairs_path: new})

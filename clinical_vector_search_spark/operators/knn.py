@@ -126,6 +126,23 @@ def _knn_window(
     return _ranked(scored, query_id, doc_id, k)
 
 
+def _collect_queries(
+    queries: DataFrame, query_id: str, query_vec: str, caller: str
+) -> list:
+    """The bounded query-side collect of every operator that ships the
+    query set to the driver (one job): at most 100 000 rows, else
+    ``ValueError``. ``limit`` runs BEFORE ``collect``, so an oversized
+    frame raises with bounded driver memory instead of OOM-ing the
+    collect the guard exists to prevent."""
+    rows = queries.select(query_id, query_vec).limit(100_001).collect()
+    if len(rows) > 100_000:
+        raise ValueError(
+            f"{caller} collects the query side to the driver (>100000 "
+            "rows); pre-reduce the query set or shard it"
+        )
+    return rows
+
+
 def _knn_partial_topk(
     queries: DataFrame,
     docs: DataFrame,
@@ -143,14 +160,9 @@ def _knn_partial_topk(
     """
     import numpy as np
 
-    # limit BEFORE collect: an oversized query frame must raise with
-    # bounded driver memory, not OOM the collect the guard exists for
-    rows = queries.select(query_id, query_vec).limit(100_001).collect()
-    if len(rows) > 100_000:
-        raise ValueError(
-            "partial_topk collects the query side (>100000 rows); "
-            "use strategy='window' or pre-reduce the query set"
-        )
+    rows = _collect_queries(
+        queries, query_id, query_vec, "knn(strategy='partial_topk')"
+    )
     q_ids = [r[0] for r in rows]  # kept generic — int or string ids both work
     q_mat = np.array([r[1] for r in rows], dtype="float64")  # Q x d
 
@@ -515,14 +527,9 @@ def _knn_l2_partial(
     bit-stable across strategies."""
     import numpy as np
 
-    # limit BEFORE collect: an oversized query frame must raise with
-    # bounded driver memory, not OOM the collect the guard exists for
-    rows = queries.select(query_id, query_vec).limit(100_001).collect()
-    if len(rows) > 100_000:
-        raise ValueError(
-            "partial_topk collects the query side (>100000 rows); "
-            "use strategy='window' or pre-reduce the query set"
-        )
+    rows = _collect_queries(
+        queries, query_id, query_vec, "knn_l2(strategy='partial_topk')"
+    )
     q_ids = [r[0] for r in rows]
     q_mat = np.array([r[1] for r in rows], dtype="float64")
     q_sq = (q_mat**2).sum(axis=1)

@@ -43,7 +43,10 @@ from clinical_vector_search_spark.functions.vector import (
 from clinical_vector_search_spark.operators.knn import (
     ASSIGN_SCALE as _ASCALE,
 )
-from clinical_vector_search_spark.operators.knn import _ranked_asc
+from clinical_vector_search_spark.operators.knn import (
+    _collect_queries,
+    _ranked_asc,
+)
 
 PQ_SALT = 7777777
 
@@ -226,22 +229,6 @@ def pq_encode(
     return df.select(id_col, vec_col).mapInPandas(
         fn, f"{id_col} long, {out_col} array<int>"
     )
-
-
-def _collect_queries(
-    queries: DataFrame, query_id: str, query_vec: str, caller: str
-) -> list:
-    """Collect the query side to the driver (one job) to build ADC
-    tables. ``limit`` BEFORE ``collect`` so an oversized query frame is
-    detected with bounded driver memory instead of OOM-ing the collect
-    the guard exists to prevent (same discipline as _knn_partial_topk)."""
-    qrows = queries.select(query_id, query_vec).limit(100_001).collect()
-    if len(qrows) > 100_000:
-        raise ValueError(
-            f"{caller} collects the query side (>100000 rows) "
-            "to build ADC tables; pre-reduce the query set or shard it"
-        )
-    return qrows
 
 
 def knn_pq_adc(
@@ -619,39 +606,12 @@ def read_ivfpq_index(
     the mixed layout after ``io.tables.compact_batched``.
 
     ``tombstone_path`` (an :func:`ivfpq_index_delete` directory) filters
-    deleted ids with a BROADCAST anti-join — tombstones are tiny
-    relative to the codes (they must stay broadcast-sized between
-    ``compact_tombstoned`` runs; compaction cadence bounds the set), so
-    the read stays one codes scan; a missing or empty tombstone
-    directory means nothing is deleted.
+    deleted ids with a BROADCAST anti-join, so the read stays one codes
+    scan. All of it — swap self-heal included — is the shared reader
+    half, ``io.tables.read_batches``."""
+    from clinical_vector_search_spark.io.tables import read_batches
 
-    Self-heals the compactor's mid-swap crash window first
-    (``io.tables.recover_interrupted_swap``): if a crashed
-    ``compact_*`` left the codes directory absent with its data at
-    ``<path>__old_<tag>``, the read renames it back instead of
-    failing."""
-    from pyspark.errors import AnalysisException
-
-    from clinical_vector_search_spark.io.tables import (
-        is_absence_error,
-        recover_interrupted_swap,
-    )
-
-    recover_interrupted_swap(spark, path)
-    codes = spark.read.option("recursiveFileLookup", "true").parquet(path)
-    if tombstone_path is None:
-        return codes
-    try:
-        dead = spark.read.option("recursiveFileLookup", "true").parquet(
-            tombstone_path
-        )
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
-        return codes
-    return codes.join(
-        F.broadcast(dead.select(id_col)), id_col, "left_anti"
-    )
+    return read_batches(spark, path, tombstones=tombstone_path, key=id_col)
 
 
 def ivfpq_index_add(
@@ -688,37 +648,24 @@ def ivfpq_index_add(
     Arrow-batched NumPy throughput path (measured 0.26 s vs 2.1 s warm
     on a 250-row batch — the plan-compile gap, not a kernel gap).
 
-    The sink is idempotent under at-least-once retries exactly like
-    ``dedup.ingest_neardup_batch``: each batch OVERWRITES its own
-    ``batch-{id}`` subdirectory, so re-running a (batch, batch_id) pair
-    leaves the index bit-identical. Read back with
-    :func:`read_ivfpq_index`; compact with
-    ``io.tables.compact_batched`` on the usual cadence.
-    Deterministic end-to-end (``ASSIGN_SCALE`` quantized argmax,
-    first-min codes), so the oracle contract is the full-index rebuild
-    restricted to batch rows. Idempotency holds UP TO the last
-    ``io.tables.compact_batched``: redelivery of a batch compaction
-    already folded is refused loudly instead of double-counted."""
-    from clinical_vector_search_spark.io.tables import (
-        guard_batch_not_compacted,
-    )
+    Storage is the shared sink half (``io.tables.open_batch`` /
+    ``write_batch``: batch-id overwrite, so retries are bit-identical
+    up to the last ``compact_batched``). Read back with
+    :func:`read_ivfpq_index`. Deterministic end-to-end
+    (``ASSIGN_SCALE`` quantized argmax, first-min codes), so the oracle
+    contract is the full-index rebuild restricted to batch rows."""
+    from clinical_vector_search_spark.io.tables import open_batch, write_batch
 
     if encoder not in ("expr", "pd"):
         raise ValueError(
             f"encoder must be 'expr' or 'pd', got {encoder!r}"
         )
-    from clinical_vector_search_spark.io.tables import batch_subdir
-
-    bsub = batch_subdir("batch", run_id, batch_id)
-    guard_batch_not_compacted(index_path, bsub)
+    bsub = open_batch(spark, "batch", run_id, batch_id, [index_path])
     enc_fn = ivfpq_encode if encoder == "expr" else ivfpq_encode_pd
     enc = enc_fn(
         new_vecs, dim, books, centroids, n_centroids, id_col, vec_col, residual
     )
-    from clinical_vector_search_spark.io.tables import ingest_markers
-
-    with ingest_markers(spark, [index_path]):
-        enc.write.mode("overwrite").parquet(f"{index_path}/{bsub}")
+    write_batch(spark, bsub, {index_path: enc})
 
 
 def knn_pq_refine(
@@ -854,16 +801,12 @@ def ivfpq_index_delete(
     write, physical erasure happens at the next compaction — rewrite
     the codes minus tombstones, then clear the tombstone directory).
     Tombstones win over every add; re-ingesting a deleted id requires
-    that physical compaction first."""
-    from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        ingest_markers,
-    )
+    that physical compaction first. Storage is the shared sink half
+    (``io.tables.open_batch`` / ``write_batch``)."""
+    from clinical_vector_search_spark.io.tables import open_batch, write_batch
 
-    with ingest_markers(spark, [tombstone_path]):
-        ids.select(id_col).distinct().write.mode("overwrite").parquet(
-            f"{tombstone_path}/{batch_subdir('batch', run_id, batch_id)}"
-        )
+    sub = open_batch(spark, "batch", run_id, batch_id, [tombstone_path])
+    write_batch(spark, sub, {tombstone_path: ids.select(id_col).distinct()})
 
 
 def write_trained_state(
@@ -920,22 +863,14 @@ def read_trained_state(spark, index_path: str) -> dict | None:
     :func:`reindex_ivfpq` — the (centroids, books, dim, m, ksub,
     residual) every :func:`ivfpq_index_add` and serving call must agree
     on. None when the index carries no state file (pre-r14 indexes,
-    where the caller keeps the trained state itself)."""
+    where the caller keeps the trained state itself). Self-heals a
+    crashed swap first (``io.tables.read_sidecar``)."""
     import json
 
-    from clinical_vector_search_spark.io.tables import (
-        TRAINED_SIDECAR,
-        _hadoop_fs,
-        _read_small_file,
-    )
+    from clinical_vector_search_spark.io.tables import read_sidecar
 
-    jvm, fs, _ = _hadoop_fs(spark, index_path)
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path.rstrip('/')}/{TRAINED_SIDECAR}"
-    )
-    if not fs.exists(p):
-        return None
-    return json.loads(_read_small_file(fs, p))
+    payload = read_sidecar(spark, index_path)
+    return None if payload is None else json.loads(payload)
 
 
 def reindex_ivfpq(
@@ -1091,19 +1026,12 @@ def knn_ivfpq_serve(
     plausible-looking garbage.
 
     Two read-consistency guards (r14 review): the mid-swap crash
-    window is healed BEFORE the state read (a bare ``fs.exists`` on
-    the sidecar would otherwise misdiagnose a recoverable crashed
-    index as 'no trained state'), and because state + codes are two
-    separate unleased reads, the state is RE-read after the codes
-    listing snapshot — a concurrent :func:`reindex_ivfpq` swap landing
+    window is healed BEFORE the state read (:func:`read_trained_state`
+    heals first), and because state + codes are two separate unleased
+    reads, the state is RE-read after the codes listing snapshot — a concurrent :func:`reindex_ivfpq` swap landing
     between them would otherwise score new-geometry codes with
     old-geometry ADC tables, silently. A mismatch retries with a
     fresh pair; swaps are rare, so one retry normally suffices."""
-    from clinical_vector_search_spark.io.tables import (
-        recover_interrupted_swap,
-    )
-
-    recover_interrupted_swap(spark, index_path)
     for _ in range(3):
         st = read_trained_state(spark, index_path)
         if st is None:

@@ -198,21 +198,12 @@ def tfidf_index_add(
       ``scalars/batch-N``   (n_docs,)       — one exact-integer row.
 
     :func:`tfidf_read_index` refolds idf at vocabulary granularity.
-    Each batch OVERWRITES its own batch-id subdirectories
-    (at-least-once retries are bit-identical); compact each stat
-    subdirectory with ``io.tables.compact_batched`` on the usual
-    cadence — idempotency holds UP TO the last compaction, after which
-    redelivery is refused loudly. ``run_id`` namespaces the
-    subdirectory for ingestion from a NEW streaming query/checkpoint
-    (the ``ingest_neardup_batch`` contract)."""
-    from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-    )
+    Storage is the shared sink half (``io.tables.open_batch`` /
+    ``write_batch``), as for the BM25 twin."""
+    from clinical_vector_search_spark.io.tables import open_batch, write_batch
 
-    bsub = batch_subdir("batch", run_id, batch_id)
-    for sub in ("postings", "df", "scalars"):
-        guard_batch_not_compacted(f"{index_path}/{sub}", bsub)
+    dirs = [f"{index_path}/{s}" for s in ("postings", "df", "scalars")]
+    bsub = open_batch(spark, "batch", run_id, batch_id, dirs)
     toks = new_docs.select(
         F.col(id_col).alias("doc"), TXT.tokenize(text_col).alias("tokens")
     ).localCheckpoint()  # consumed by postings, df and scalars
@@ -223,27 +214,7 @@ def tfidf_index_add(
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scalars = toks.agg(F.count(F.lit(1)).alias("n_docs"))
-    from clinical_vector_search_spark.io.tables import (
-        ingest_markers,
-        run_write_jobs,
-    )
-
-    with ingest_markers(
-        spark, [f"{index_path}/{s}" for s in ("postings", "df", "scalars")]
-    ):
-        # three independent outputs of the checkpointed toks frame —
-        # concurrent submission (guide §2.6), same as bm25_index_add
-        run_write_jobs(
-            lambda: tf.write.mode("overwrite").parquet(
-                f"{index_path}/postings/{bsub}"
-            ),
-            lambda: dfreq.write.mode("overwrite").parquet(
-                f"{index_path}/df/{bsub}"
-            ),
-            lambda: scalars.write.mode("overwrite").parquet(
-                f"{index_path}/scalars/{bsub}"
-            ),
-        )
+    write_batch(spark, bsub, dict(zip(dirs, (tf, dfreq, scalars))))
 
 
 def tfidf_index_delete(
@@ -262,43 +233,25 @@ def tfidf_index_delete(
     (−n_docs) and ``deleted/del-N`` (doc,) tombstones; postings files
     are untouched (physical erasure happens at the next
     ``compact_tombstoned``). Idempotent the same three ways: batch-id
-    overwrite for at-least-once retries; re-deleting an ALREADY-deleted
-    doc is fenced to a no-op by the broadcast anti-join against the
-    existing tombstones (excluding the batch's OWN ``del-N`` files by
-    the parent-directory exact match, so same-id retries still see the
-    index as the first attempt did); within-batch duplicates collapse.
-    The tombstone set must stay broadcast-sized between compactions
-    (compaction cadence bounds it). The one unfenceable window — same
+    overwrite (the shared sink half); re-deleting an ALREADY-deleted
+    doc is a fenced no-op (``io.tables.fence_redeletes``);
+    within-batch duplicates collapse. The one unfenceable window — same
     as the BM25 twin: after ``compact_tombstoned`` clears ``deleted/``,
     a replayed delete of a physically erased doc is indistinguishable
     from deleting a never-ingested doc (it would double-subtract
     df/n_docs), which the delete-by-replay contract already forbids —
     deletes must not be replayed across a compaction boundary."""
-    from pyspark.errors import AnalysisException
-
     from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-        is_absence_error,
+        fence_redeletes,
+        open_batch,
+        write_batch,
     )
 
-    dsub = batch_subdir("del", run_id, batch_id)
-    for sub in ("df", "scalars", "deleted"):
-        guard_batch_not_compacted(f"{index_path}/{sub}", dsub)
-    batch = deleted_docs.dropDuplicates([id_col])
-    try:
-        already = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(f"{index_path}/deleted")
-            .filter(
-                F.element_at(F.split(F.input_file_name(), "/"), -2) != dsub
-            )
-            .select(F.col("doc").alias(id_col))
-        )
-        batch = batch.join(F.broadcast(already), id_col, "left_anti")
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
+    dirs = [f"{index_path}/{s}" for s in ("df", "scalars", "deleted")]
+    dsub = open_batch(spark, "del", run_id, batch_id, dirs)
+    batch = fence_redeletes(
+        spark, deleted_docs.dropDuplicates([id_col]), dirs[2], dsub, id_col
+    )
     toks = batch.select(
         F.col(id_col).alias("doc"), TXT.tokenize(text_col).alias("tokens")
     ).localCheckpoint()  # consumed by df, scalars and tombstones
@@ -310,27 +263,7 @@ def tfidf_index_delete(
     neg_df = tf.groupBy("term").agg((-F.count(F.lit(1))).alias("df"))
     neg_scalars = toks.agg((-F.count(F.lit(1))).alias("n_docs"))
     tomb = toks.select("doc").distinct()
-    from clinical_vector_search_spark.io.tables import (
-        ingest_markers,
-        run_write_jobs,
-    )
-
-    with ingest_markers(
-        spark, [f"{index_path}/{s}" for s in ("df", "scalars", "deleted")]
-    ):
-        # independent outputs of the checkpointed toks — concurrent
-        # submission (guide §2.6), same as the bm25 twin
-        run_write_jobs(
-            lambda: neg_df.write.mode("overwrite").parquet(
-                f"{index_path}/df/{dsub}"
-            ),
-            lambda: neg_scalars.write.mode("overwrite").parquet(
-                f"{index_path}/scalars/{dsub}"
-            ),
-            lambda: tomb.write.mode("overwrite").parquet(
-                f"{index_path}/deleted/{dsub}"
-            ),
-        )
+    write_batch(spark, dsub, dict(zip(dirs, (neg_df, neg_scalars, tomb))))
 
 
 def tfidf_read_index(spark, index_path: str) -> DataFrame:
@@ -345,40 +278,21 @@ def tfidf_read_index(spark, index_path: str) -> DataFrame:
     output is value-identical to ``tfidf_index`` over the surviving
     corpus, so :func:`tfidf_doc_norms` / :func:`tfidf_cosine_topk`
     consume it unchanged. Lazy; postings are touched only by the
-    downstream query-term join. Each stat directory self-heals the
-    compactor's mid-swap crash window before its scan
-    (``io.tables.recover_interrupted_swap``)."""
-    from pyspark.errors import AnalysisException
+    downstream query-term join. Every directory goes through the shared
+    reader half (``io.tables.read_batches``), the fixed-contract stat
+    directories with a fixed schema (see the bm25 twin)."""
+    from clinical_vector_search_spark.io.tables import read_batches
 
-    from clinical_vector_search_spark.io.tables import (
-        is_absence_error,
-        recover_interrupted_swap,
+    postings = read_batches(
+        spark, f"{index_path}/postings", tombstones=f"{index_path}/deleted"
     )
-
-    def rec(sub: str, schema: str | None = None) -> DataFrame:
-        recover_interrupted_swap(spark, f"{index_path}/{sub}")
-        reader = spark.read.option("recursiveFileLookup", "true")
-        if schema is not None:
-            # fixed writer contract for the stat directories — skips
-            # the per-file footer-inference pass (see the bm25 twin)
-            reader = reader.schema(schema)
-        return reader.parquet(f"{index_path}/{sub}")
-
-    postings = rec("postings")
-    try:  # tfidf_index_delete tombstones — tiny, broadcast anti-join
-        postings = postings.join(
-            F.broadcast(rec("deleted")), "doc", "left_anti"
-        )
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
     dfreq = (
-        rec("df", "term string, df long")
+        read_batches(spark, f"{index_path}/df", "term string, df long")
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
         .filter(F.col("df") > 0)
     )
-    n_docs = rec("scalars", "n_docs long").agg(
+    n_docs = read_batches(spark, f"{index_path}/scalars", "n_docs long").agg(
         F.sum("n_docs").cast("double").alias("n_docs")
     )
     idf_tbl = dfreq.crossJoin(F.broadcast(n_docs)).select(
@@ -465,25 +379,16 @@ def trigram_index_add(
       ``postings/batch-N``  (doc, trigram) — per-doc, immutable.
 
     Cost ∝ batch (one map-side explode of the batch — zero joins, zero
-    corpus rescan); each batch OVERWRITES its own subdirectory
-    (at-least-once retries bit-identical); redelivery of a batch folded
-    by ``io.tables.compact_batched`` is refused loudly. ``run_id``
-    namespaces batches from a new streaming query/checkpoint."""
-    from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-        ingest_markers,
-    )
+    corpus rescan); storage is the shared sink half
+    (``io.tables.open_batch`` / ``write_batch``)."""
+    from clinical_vector_search_spark.io.tables import open_batch, write_batch
 
-    bsub = batch_subdir("batch", run_id, batch_id)
-    guard_batch_not_compacted(f"{index_path}/postings", bsub)
+    postings = f"{index_path}/postings"
+    bsub = open_batch(spark, "batch", run_id, batch_id, [postings])
     grams = trigram_postings(new_docs, text_col, id_col).select(
         F.col(id_col).alias("doc"), "trigram"
     )
-    with ingest_markers(spark, [f"{index_path}/postings"]):
-        grams.write.mode("overwrite").parquet(
-            f"{index_path}/postings/{bsub}"
-        )
+    write_batch(spark, bsub, {postings: grams})
 
 
 def trigram_index_delete(
@@ -504,44 +409,23 @@ def trigram_index_delete(
     inherently a no-op (a duplicate tombstone row changes nothing) —
     the degenerate, and therefore simplest, instance of the shared
     protocol."""
-    from clinical_vector_search_spark.io.tables import (
-        batch_subdir,
-        guard_batch_not_compacted,
-        ingest_markers,
-    )
+    from clinical_vector_search_spark.io.tables import open_batch, write_batch
 
-    dsub = batch_subdir("del", run_id, batch_id)
-    guard_batch_not_compacted(f"{index_path}/deleted", dsub)
+    deleted = f"{index_path}/deleted"
+    dsub = open_batch(spark, "del", run_id, batch_id, [deleted])
     tomb = deleted_ids.select(F.col(id_col).alias("doc")).distinct()
-    with ingest_markers(spark, [f"{index_path}/deleted"]):
-        tomb.write.mode("overwrite").parquet(f"{index_path}/deleted/{dsub}")
+    write_batch(spark, dsub, {deleted: tomb})
 
 
 def trigram_read_index(spark, index_path: str, id_col: str = "doc_id"):
     """Read a maintained trigram index back as the
     :func:`trigram_postings`-shaped frame (``id_col``, trigram):
-    recursive postings scan, broadcast tombstone anti-join, mid-swap
-    self-heal on both stat directories — :func:`trigram_search`
-    consumes it unchanged."""
-    from pyspark.errors import AnalysisException
+    the shared reader half (``io.tables.read_batches``: mid-swap
+    self-heal, recursive postings scan, broadcast tombstone anti-join)
+    — :func:`trigram_search` consumes it unchanged."""
+    from clinical_vector_search_spark.io.tables import read_batches
 
-    from clinical_vector_search_spark.io.tables import (
-        is_absence_error,
-        recover_interrupted_swap,
+    postings = read_batches(
+        spark, f"{index_path}/postings", tombstones=f"{index_path}/deleted"
     )
-
-    def rec(sub: str) -> DataFrame:
-        recover_interrupted_swap(spark, f"{index_path}/{sub}")
-        return spark.read.option("recursiveFileLookup", "true").parquet(
-            f"{index_path}/{sub}"
-        )
-
-    postings = rec("postings")
-    try:
-        postings = postings.join(
-            F.broadcast(rec("deleted")), "doc", "left_anti"
-        )
-    except AnalysisException as e:
-        if not is_absence_error(e):
-            raise
     return postings.select(F.col("doc").alias(id_col), "trigram")

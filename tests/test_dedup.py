@@ -615,6 +615,53 @@ def test_neardup_ingest_batch_retry_is_idempotent(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def test_neardup_ingest_after_crashed_swap_keeps_pairs(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crashed compaction swap of the band index (live name absent,
+    rows at ``index__old_<tag>``) must not read as "first batch" on the
+    next ingest: the sink heals the swap before probing, so a later
+    duplicate of a batch-0 doc still gets its new×old pair and the
+    index keeps batch 0's buckets."""
+    from test_swap_recovery import _crash_mid_swap
+
+    from clinical_vector_search_spark.operators.dedup import (
+        ingest_neardup_batch,
+        read_neardup_output,
+    )
+
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 200)
+    )
+    dup = docs.filter(F.col("doc_id") == 5).withColumn(
+        "doc_id", F.lit(1000).cast("long")
+    )
+    b0 = docs.filter(F.col("doc_id") < 100)
+    b1 = docs.filter(F.col("doc_id") >= 100).unionByName(dup)
+    idx, prs = str(tmp_path / "index"), str(tmp_path / "pairs")
+
+    ingest_neardup_batch(spark, b0, 0, idx, prs, 4, 2, 3)
+    _crash_mid_swap(spark, idx, monkeypatch, recursive=True)
+    ingest_neardup_batch(spark, b1, 1, idx, prs, 4, 2, 3)
+
+    got = {
+        (r.a_id, r.b_id) for r in read_neardup_output(spark, prs).collect()
+    }
+    want = {
+        (r.a_id, r.b_id)
+        for r in minhash_candidate_pairs(
+            docs.unionByName(dup), 4, 2, 3
+        ).collect()
+    }
+    assert (5, 1000) in got
+    assert got == want
+    assert {r.doc_id for r in read_neardup_output(spark, idx).collect()} == {
+        r.doc_id for r in docs.unionByName(dup).collect()
+    }
+
+
 def test_neardup_index_compaction_cadence(spark, sf_dir, tmp_path):
     """The documented maintenance cadence: compact_parquet(recursive=True)
     over the per-batch index subdirectories, then keep ingesting — the

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clinical_vector_search_spark.functions import vector as V
-from clinical_vector_search_spark.operators.knn import knn, knn_lsh
+from clinical_vector_search_spark.operators.knn import knn, knn_l2, knn_lsh
 
 DIM = 64
 
@@ -158,3 +158,20 @@ def test_range_search_broadcast_guard_fallback(spark, sf_dir, monkeypatch):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert got == base and len(base) > 0
+
+
+@pytest.mark.parametrize("op", [knn, knn_l2], ids=["knn", "knn_l2"])
+def test_partial_topk_rejects_oversized_query_frame(spark, op):
+    """partial_topk collects the query side to the driver: a frame above
+    100 000 rows raises ValueError at plan build instead of collecting
+    unbounded."""
+    docs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "doc_id long, embedding array<double>",
+    )
+    queries = spark.range(100_001).select(
+        F.col("id").alias("query_id"),
+        F.array_repeat(F.lit(0.0), 2).alias("query_vec"),
+    )
+    with pytest.raises(ValueError, match="100000"):
+        op(queries, docs, 1, strategy="partial_topk")

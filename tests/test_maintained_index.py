@@ -24,6 +24,7 @@ test_property.py and the per-file lifecycle duplicates pruned from
 test_bm25.py / test_tfidf_incremental.py / test_pq.py."""
 from __future__ import annotations
 
+import glob
 import os
 from dataclasses import dataclass
 from typing import Callable
@@ -374,6 +375,27 @@ def test_compact_batched_preserves_view_and_fences_redelivery(
         kit.add(spark, b0, 0, base)
     kit.add(spark, b1, 1, base)
     assert kit.snap(kit.read(spark, base)) == kit.snap(kit.rebuild(docs))
+
+
+def test_add_after_crashed_swap_keeps_earlier_rows(
+    spark, kit, tmp_path, monkeypatch
+):
+    """A compaction that crashes between its swap's two renames leaves
+    the live directory absent with the rows at ``<dir>__old_<tag>``. The
+    next batch add must self-heal that swap BEFORE it writes its own
+    subdirectory: writing first recreates the live name, readers then
+    never heal, and the earlier batch's rows are stranded (and deleted
+    by the next deep compaction pass)."""
+    from test_swap_recovery import _crash_mid_swap
+
+    base = str(tmp_path / kit.name)
+    docs = kit.corpus(spark)
+    kit.add(spark, docs.filter(F.col(kit.id_col) < 3), 0, base)
+    crashed = kit.compact_dirs(base)[0]
+    _crash_mid_swap(spark, crashed, monkeypatch, recursive=True)
+    kit.add(spark, docs.filter(F.col(kit.id_col) >= 3), 1, base)
+    assert kit.snap(kit.read(spark, base)) == kit.snap(kit.rebuild(docs))
+    assert glob.glob(crashed + "__old_*") == []
 
 
 def test_tombstone_compaction_physically_erases(spark, kit, tmp_path):

@@ -1,7 +1,8 @@
 """Each operator has one implementation: the package defines no pair of
 top-level functions ``X`` and ``X_pd`` unless ``X`` is allowlisted below
-with the reason its second implementation stays. Pure source scan, no
-Spark."""
+with the reason its second implementation stays, and the maintained-index
+storage protocol is spelled out only in ``io/tables.py``. Pure source
+scan, no Spark."""
 
 from __future__ import annotations
 
@@ -41,3 +42,38 @@ def test_no_unlisted_pd_twins():
     )
     # an allowlist entry whose pair is gone is stale
     assert sorted(ALLOWED_PAIRS.keys() - pairs) == []
+
+
+# the steps of the maintained-index batch protocol; kits reach them only
+# through io.tables' two halves (open_batch / write_batch, read_batches)
+PROTOCOL_STEPS = {
+    "batch_subdir",
+    "guard_batch_not_compacted",
+    "ingest_markers",
+    "recover_interrupted_swap",
+    "run_write_jobs",
+}
+
+
+def test_batch_protocol_is_written_once_in_io_tables():
+    tables = PACKAGE / "io" / "tables.py"
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == tables:
+            continue
+        rel = path.relative_to(PACKAGE)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = getattr(func, "id", None) or getattr(func, "attr", None)
+                if name in PROTOCOL_STEPS:
+                    offenders.append(f"{rel}:{node.lineno} calls {name}")
+            elif (
+                isinstance(node, ast.Constant)
+                and node.value == "recursiveFileLookup"
+            ):
+                offenders.append(f"{rel}:{node.lineno} recursiveFileLookup")
+    assert offenders == [], (
+        f"batch protocol steps outside io/tables.py: {offenders}; call "
+        "open_batch / write_batch / read_batches instead"
+    )

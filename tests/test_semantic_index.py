@@ -345,3 +345,12 @@ def test_backfill_recovers_pairs_the_stale_geometry_missed(
         .parquet(P).select("a_id", "b_id").collect()
     }
     assert acc2 == acc
+    # at-least-once redelivery of the SAME batch id: the anti-join must
+    # not see the batch's own earlier output, or the overwrite empties it
+    backfill_semantic_pairs(spark, A, P, threshold=thr)
+    acc3 = {
+        (r.a_id, r.b_id)
+        for r in spark.read.option("recursiveFileLookup", "true")
+        .parquet(P).select("a_id", "b_id").collect()
+    }
+    assert acc3 == acc

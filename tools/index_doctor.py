@@ -79,7 +79,7 @@ def diagnose(spark, path: str) -> dict:
     if not st["path_exists"] and len(st["old_siblings"]) == 1:
         act = (
             "crashed mid-swap: data intact at the __old sibling; any "
-            "read or compaction of this path self-heals "
+            "read, ingest or compaction of this path self-heals "
             "(recover_interrupted_swap) — or just re-run the job"
         )
     elif not st["path_exists"] and len(st["old_siblings"]) > 1:
