@@ -2741,15 +2741,15 @@ def q_events_streaming_outer_join(
     Streaming can only do once the watermark proves no match can
     arrive — the classic outer-join correctness trap. AvailableNow
     replay with typed flush sentinels (streaming/events.py
-    run_streaming_interval_join_outer); rollup hash-matches the batch
-    LEFT JOIN SQL."""
+    run_streaming_interval_join, join_type="left_outer"); rollup
+    hash-matches the batch LEFT JOIN SQL."""
     from clinical_vector_search_spark.streaming.events import (
-        run_streaming_interval_join_outer,
+        run_streaming_interval_join,
     )
 
     _events(spark, sf_dir)  # sets the nanosAsLong session conf
-    return run_streaming_interval_join_outer(
-        spark, sf_dir, max_delta_sec=3600
+    return run_streaming_interval_join(
+        spark, sf_dir, "left_outer", max_delta_sec=3600
     )
 
 
@@ -2759,16 +2759,16 @@ def q_events_streaming_full_outer_join(
     """FULL OUTER stream-stream interval join — completes the certified
     join matrix (inner/left/full): view-less clicks AND click-less
     orphan views both emit on watermark advance
-    (streaming/events.py run_streaming_interval_join_full_outer).
-    Hash-matches the batch FULL-join oracle (click rollup UNION
-    orphan-view rows)."""
+    (streaming/events.py run_streaming_interval_join,
+    join_type="full_outer"). Hash-matches the batch FULL-join oracle
+    (click rollup UNION orphan-view rows)."""
     from clinical_vector_search_spark.streaming.events import (
-        run_streaming_interval_join_full_outer,
+        run_streaming_interval_join,
     )
 
     _events(spark, sf_dir)  # sets the nanosAsLong session conf
-    return run_streaming_interval_join_full_outer(
-        spark, sf_dir, max_delta_sec=3600
+    return run_streaming_interval_join(
+        spark, sf_dir, "full_outer", max_delta_sec=3600
     )
 
 

@@ -16,6 +16,9 @@ caller's session timezone.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -69,6 +72,126 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _with_ts_ns(df)
 
 
+def _replay_to_memory(
+    df: DataFrame, output_mode: str, tag: str, timeout_sec: float
+) -> DataFrame:
+    """Run the streaming frame ``df`` as a bounded availableNow replay into
+    a memory sink and return the sink's rows as a batch frame.
+
+    The returned frame's analyzed plan holds the sink itself, so the
+    catalog view the memory sink registers is dropped before returning —
+    also on timeout or failure. Repeated calls leave no view behind, and
+    the rows live exactly as long as the returned frame."""
+    import uuid
+
+    # awaitTermination rejects a timeout <= 0 only after start(), which
+    # would leave the query running and its view registered
+    if not timeout_sec > 0:
+        raise ValueError(f"timeout_sec must be > 0, got {timeout_sec!r}")
+    spark = df.sparkSession
+    name = f"{tag}_{uuid.uuid4().hex[:12]}"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        # awaitTermination(timeout) returns False on timeout — the memory
+        # table then holds a PARTIAL answer; fail loudly rather than
+        # silently return an incomplete streaming result.
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"streaming query {name!r} did not terminate within "
+                f"{timeout_sec}s; partial results discarded"
+            )
+        return spark.table(name)
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
+
+
+@contextmanager
+def _sentinel_replay(
+    spark: SparkSession,
+    sf_dir: str,
+    sentinel_types: tuple[str, ...],
+    step_sec: int,
+) -> Iterator[tuple[DataFrame, int]]:
+    """Bounded replay of the events table that ADVANCES the watermark past
+    every real event. Yields (stream, max real ts_ns): a streaming frame
+    over a temp directory holding the data as ONE file plus two far-future
+    sentinel files, read one file per micro-batch. The directory is
+    removed on exit, so run the query inside the ``with`` block (a memory
+    sink keeps its rows afterwards).
+
+    Sentinel file i ∈ {1, 2} holds one row per entry of ``sentinel_types``
+    at max_ts + i·``step_sec``, with negative event ids and user_id −1, so
+    it never joins a real row; callers drop sentinel output by id or by
+    window. The first sentinel batch moves the watermark past every real
+    event, so state eviction emits what only the watermark can finalize
+    (outer-join null rows, appended windows); the second covers what the
+    first batch's eviction itself produced (rows inside the final
+    watermark-delay tail, or a downstream stateful operator's input).
+    ``step_sec`` must exceed the operator's window/range plus the
+    watermark delay. Without sentinels an availableNow replay TERMINATES
+    with that state never evicted."""
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = f"{sf_dir}/events.parquet"
+    static = spark.read.parquet(src)
+    max_ts_ns = _with_ts_ns(static).agg(F.max("ts_ns")).collect()[0][0]
+    schema = pq.read_schema(src)
+    # parquet timestamps come in ms, us or ns
+    ts_unit = {"ms": 1_000_000, "us": 1000, "ns": 1}[
+        schema.field("ts").type.unit
+    ]
+    tmp = tempfile.mkdtemp(prefix="events_replay_")
+    try:
+        # ONE file for the data batch (a byte copy of the single-file
+        # table, as read_events_stream reads it): multiple files would split
+        # the data across micro-batches, and any event ordered after a
+        # near-max-ts file would arrive BEHIND the advanced watermark
+        # and be dropped as late (observed: one view-less click lost).
+        # An unbounded production stream replays in event order from a
+        # checkpointed source; this replay reproduces that by keeping
+        # all data ahead of the first watermark advance.
+        shutil.copyfile(src, f"{tmp}/f0.parquet")
+        for i in (1, 2):
+            ts = (max_ts_ns + i * step_sec * NS) // ts_unit
+            rows = [
+                {"event_id": -1000 * (j + 1) - i, "user_id": -1,
+                 "event_type": t, "value": 0.0, "props": "{}", "ts": ts}
+                for j, t in enumerate(sentinel_types)
+            ]
+            # the source file's own schema, so one streaming schema
+            # covers all files
+            pq.write_table(
+                pa.Table.from_pylist(rows, schema=schema),
+                f"{tmp}/f{i}.parquet",
+            )
+        # file mod-time orders the micro-batches: pin it explicitly
+        # (sleeping between writes is slower and fs-resolution-fragile)
+        now = time.time()
+        for i in (0, 1, 2):
+            os.utime(f"{tmp}/f{i}.parquet", (now + 10 * i, now + 10 * i))
+        stream = _with_ts_ns(
+            spark.readStream.schema(static.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(tmp)
+        )
+        yield stream, max_ts_ns
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def run_streaming_tumbling(
     spark: SparkSession,
     sf_dir: str,
@@ -80,29 +203,10 @@ def run_streaming_tumbling(
     return the final result as a batch DataFrame shaped exactly like
     ``tumbling_agg`` (window_start as epoch seconds) — so a bounded
     replay is directly comparable to the batch twin / SQL oracle."""
-    import uuid
-
-    name = f"tumbling_{uuid.uuid4().hex[:12]}"
     agg = streaming_tumbling_counts(
         spark, read_events_stream(spark, sf_dir), window_sec
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False on timeout — in that case the
-    # memory table holds a PARTIAL aggregate; stop the query and fail loudly
-    # rather than silently returning an incomplete streaming answer.
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {name!r} did not terminate within "
-            f"{timeout_sec}s; partial results discarded"
-        )
-    return spark.table(name).select(
+    return _replay_to_memory(agg, "complete", "tumbling", timeout_sec).select(
         (F.unix_timestamp(F.col("window.start"))).alias("window_start"),
         "event_type",
         "n_events",
@@ -111,32 +215,39 @@ def run_streaming_tumbling(
 
 
 def streaming_interval_join_pairs(
-    spark: SparkSession, sf_dir: str, max_delta_sec: int = 3600
+    events: DataFrame,
+    join_type: str = "inner",
+    max_delta_sec: int = 3600,
+    watermark_sec: int = 60,
 ) -> DataFrame:
-    """The stream-stream interval-join PLAN (unstarted): clicks joined to
-    same-user views from the preceding ``max_delta_sec``. Watermarks on BOTH
-    event-time columns + the time-range condition are what let Spark bound
-    the join state — tools/plan_audit.py asserts both are present."""
+    """The stream-stream interval-join PLAN (unstarted) over a streaming
+    events frame: clicks joined (``join_type``: inner, left_outer or
+    full_outer) to same-user views from the preceding ``max_delta_sec``,
+    inclusive both ends. Watermarks on BOTH event-time columns + the
+    time-range condition are what let Spark bound the join state (views
+    older than click_watermark − max_delta are dropped) and, for the
+    outer types, emit the null side once the watermark proves no match
+    can still arrive — tools/plan_audit.py asserts both for every join
+    type."""
+    wm = f"{watermark_sec} seconds"
     clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             "user_id",
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", "1 hour")
+        .withWatermark("click_ts", wm)
     )
     views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
+        events.filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id").alias("v_user_id"),
             F.col("ts").alias("view_ts"),
             "value",
         )
-        .withWatermark("view_ts", "1 hour")
+        .withWatermark("view_ts", wm)
     )
     return clicks.join(
         views,
@@ -146,219 +257,60 @@ def streaming_interval_join_pairs(
             F.col("view_ts")
             >= F.col("click_ts") - F.expr(f"INTERVAL {max_delta_sec} SECONDS")
         ),
-        "inner",
+        join_type,
     )
 
 
 def run_streaming_interval_join(
     spark: SparkSession,
     sf_dir: str,
-    max_delta_sec: int = 3600,
-    timeout_sec: int = 300,
-) -> DataFrame:
-    """REAL watermarked stream-stream interval join: every 'click' joins
-    the same user's 'view' events from the preceding ``max_delta_sec``
-    (inclusive both ends), executed as an availableNow replay of the
-    bounded events table through two file-source streams into a memory
-    sink, then rolled up per click — shaped exactly like the batch/SQL
-    oracle, so a genuine Structured Streaming run is hash-comparable.
-
-    This is the canonical two-stream stateful shape: watermarks on BOTH
-    event-time columns plus a time-range join condition let Spark bound
-    the join state (views older than click_watermark − max_delta are
-    dropped); without them the state grows forever. Inner-join matches
-    emit as soon as both sides arrive (append mode)."""
-    import uuid
-
-    name = f"ssjoin_{uuid.uuid4().hex[:12]}"
-    pairs = streaming_interval_join_pairs(spark, sf_dir, max_delta_sec)
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming join {name!r} did not terminate within "
-            f"{timeout_sec}s; partial results discarded"
-        )
-    return spark.table(name).groupBy("click_id").agg(
-        F.count("*").alias("n_views"),
-        F.round(F.sum("value"), 6).alias("sum_view_value"),
-    )
-
-
-def _interval_join_replay_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    join_type: str,
-    max_delta_sec: int,
-    watermark_sec: int,
-    timeout_sec: int,
-) -> DataFrame:
-    """Shared bounded-replay harness for the outer interval-join family
-    (see run_streaming_interval_join_outer for the full protocol
-    rationale). Returns the raw pair rows from the memory sink —
-    sentinel rows (negative ids) still included, callers filter."""
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid
-
-    src = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(src)
-    max_ts_ns = _with_ts_ns(static).agg(F.max("ts_ns")).collect()[0][0]
-
-    tmp = tempfile.mkdtemp(prefix="ssjoin_outer_")
-    try:
-        # ONE file for the data batch: multiple part files would split
-        # the data across micro-batches, and any event ordered after a
-        # near-max-ts file would arrive BEHIND the advanced watermark
-        # and be dropped as late (observed: one view-less click lost).
-        # An unbounded production stream replays in event order from a
-        # checkpointed source; this replay harness reproduces that by
-        # keeping all data ahead of the first watermark advance.
-        static.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/f0")
-        for i in (1, 2):
-            flush_ns = max_ts_ns + i * (max_delta_sec + watermark_sec + 3600) * NS
-            # Sentinels must carry the REAL event types: the watermark
-            # columns live BEHIND the click/view filters, so a
-            # 'flush'-typed row would be filtered out before the
-            # EventTimeWatermark node and advance nothing (observed:
-            # the last click of the table — the one whose click_ts IS
-            # the click-side max — never got its null row because the
-            # min-of-both-sides global watermark stalled 60s short of
-            # it). user_id=-1 keeps them from ever joining; the rollup
-            # drops their negative ids.
-            sent = spark.createDataFrame(
-                [
-                    (-1000 - i, -1, "click", 0.0, "{}"),
-                    (-2000 - i, -1, "view", 0.0, "{}"),
-                ],
-                "event_id long, user_id long, event_type string, "
-                "value double, props string",
-            ).withColumn(
-                "ts", F.timestamp_micros(F.lit(flush_ns // 1000))
-            )
-            # match the static file's ts dtype so one streaming schema
-            # covers all files
-            sent = sent.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in static.schema.fields
-                ]
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/f{i}")
-        # file mod-time orders the micro-batches: pin it explicitly
-        # (sleeping between writes is slower and fs-resolution-fragile)
-        now = _time.time()
-        for i in (0, 1, 2):
-            d = f"{tmp}/f{i}"
-            for fn in _os.listdir(d):
-                _os.utime(f"{d}/{fn}", (now + 10 * i, now + 10 * i))
-
-        stream = _with_ts_ns(
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{tmp}/*")
-        )
-        wm = f"{watermark_sec} seconds"
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                "user_id",
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", wm)
-        )
-        views = (
-            stream.filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("view_ts"),
-                "value",
-            )
-            .withWatermark("view_ts", wm)
-        )
-        pairs = clicks.join(
-            views,
-            (F.col("user_id") == F.col("v_user_id"))
-            & (F.col("view_ts") <= F.col("click_ts"))
-            & (
-                F.col("view_ts")
-                >= F.col("click_ts")
-                - F.expr(f"INTERVAL {max_delta_sec} SECONDS")
-            ),
-            join_type,
-        )
-        name = f"ssjoin_{join_type}_{uuid.uuid4().hex[:12]}"
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"streaming {join_type} join {name!r} did not terminate "
-                f"within {timeout_sec}s; partial results discarded"
-            )
-        # memory sink holds the rows; safe to drop the replay dir after
-        return spark.table(name)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def run_streaming_interval_join_outer(
-    spark: SparkSession,
-    sf_dir: str,
+    join_type: str = "inner",
     max_delta_sec: int = 3600,
     watermark_sec: int = 60,
     timeout_sec: int = 300,
 ) -> DataFrame:
-    """LEFT OUTER watermarked stream-stream interval join — the classic
-    streaming correctness trap the inner variant sidesteps: a click with
-    NO preceding same-user view must still emit (with null view
-    columns), and Structured Streaming can only emit that null row once
-    the watermark proves no matching view can still arrive. Null rows
-    therefore surface in the micro-batch AFTER the watermark passes the
-    click, not when the click is read.
+    """REAL watermarked stream-stream interval join
+    (:func:`streaming_interval_join_pairs`), executed as an availableNow
+    replay of the bounded events table (:func:`_sentinel_replay`) into a
+    memory sink and rolled up so it is hash-comparable to the batch/SQL
+    oracle.
 
-    Bounded-replay protocol (what makes this hash-comparable to a batch
-    LEFT JOIN oracle): the events table is replayed through a temp
-    directory with TWO future flush sentinel files appended and
-    ``maxFilesPerTrigger=1``. Batch 1 reads ALL the data as one file
-    (watermark still at zero — matches emit, no nulls; multiple data
-    files would put late-ordered events behind the advanced watermark
-    and silently drop them as late). Batch 2's sentinel advances the
-    watermark past every click, so its state-eviction pass emits the
-    null rows; batch 3's sentinel covers clicks inside the final
-    watermark-delay tail. Sentinels carry the REAL event types
-    ('click'/'view', negative ids, user_id=-1): the watermark columns
-    live BEHIND the type filters, so an unmatched type would advance
-    nothing — and the global watermark is the MIN across both sides,
-    so BOTH sides need one (observed otherwise: the click at click-side
-    max event time never got its null row). Without sentinels an
-    availableNow replay TERMINATES with unmatched clicks still in
-    state — dropping exactly the rows the outer join exists to keep
-    (pinned by a pytest).
+    ``join_type``:
 
-    Output: per-click rollup (click_id, n_views, sum_view_value) with
-    n_views=0 / sum NULL for view-less clicks — identical shape to the
-    batch LEFT JOIN + GROUP BY oracle."""
-    raw = _interval_join_replay_pairs(
-        spark, sf_dir, "left_outer", max_delta_sec, watermark_sec,
-        timeout_sec,
-    )
-    return (
+    * ``"inner"`` — per-click (click_id, n_views, sum_view_value) for
+      clicks with a preceding same-user view. Matches emit as soon as both
+      sides arrive, so all of them land in the first, data-only batch.
+    * ``"left_outer"`` — the same rollup, plus n_views=0 / sum NULL for
+      view-less clicks: the classic streaming correctness trap. Spark can
+      emit a click's null row only once the watermark proves no matching
+      view can still arrive, so null rows surface in a micro-batch AFTER
+      the watermark passes the click, never when the click is read.
+    * ``"full_outer"`` — two-sided: ('click', click_id, n_matched,
+      sum_value) per click as above, plus ('view_orphan', view_id, 0, own
+      value) for every view no click picked up within ``max_delta_sec``
+      after it — what a lost-attribution audit reads: impressions that
+      never converted inside the window."""
+    if join_type not in ("inner", "left_outer", "full_outer"):
+        raise ValueError(f"unknown interval join type: {join_type!r}")
+    # Sentinels carry the REAL event types: the watermark columns live
+    # BEHIND the click/view filters, so a 'flush'-typed row would be
+    # filtered out before the EventTimeWatermark node and advance
+    # nothing. And the global watermark is the MIN across both sides, so
+    # BOTH sides need one (observed otherwise: the last click of the
+    # table — the one whose click_ts IS the click-side max — never got
+    # its null row because the watermark stalled 60s short of it).
+    with _sentinel_replay(
+        spark, sf_dir, ("click", "view"), max_delta_sec + watermark_sec + 3600
+    ) as (stream, _):
+        raw = _replay_to_memory(
+            streaming_interval_join_pairs(
+                stream, join_type, max_delta_sec, watermark_sec
+            ),
+            "append",
+            f"ssjoin_{join_type}",
+            timeout_sec,
+        )
+    per_click = (
         raw.filter(F.col("click_id") >= 0)  # drop flush sentinels
         .groupBy("click_id")
         .agg(
@@ -366,42 +318,8 @@ def run_streaming_interval_join_outer(
             F.round(F.sum("value"), 6).alias("sum_view_value"),
         )
     )
-
-
-def run_streaming_interval_join_full_outer(
-    spark: SparkSession,
-    sf_dir: str,
-    max_delta_sec: int = 3600,
-    watermark_sec: int = 60,
-    timeout_sec: int = 300,
-) -> DataFrame:
-    """FULL OUTER completion of the interval-join matrix (inner +
-    left certified separately): view-less clicks AND click-less views
-    both emit on watermark advance. Two-sided output over one replay:
-    ('click', click_id, n_matched, sum_value) per click — its matched
-    views' count/sum, nulls when none — plus ('view_orphan', view_id,
-    0, own value) for every view no click ever picked up within
-    ``max_delta_sec`` after it. The orphan-view side is what a
-    lost-attribution audit reads: impressions that never converted
-    inside the window."""
-    raw = _interval_join_replay_pairs(
-        spark, sf_dir, "full_outer", max_delta_sec, watermark_sec,
-        timeout_sec,
-    )
-    clicks_side = (
-        raw.filter(F.col("click_id") >= 0)
-        .groupBy("click_id")
-        .agg(
-            F.count("view_id").alias("n_matched"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.lit("click").alias("side"),
-            F.col("click_id").alias("id"),
-            "n_matched",
-            "sum_value",
-        )
-    )
+    if join_type != "full_outer":
+        return per_click
     orphan_views = raw.filter(
         F.col("click_id").isNull() & (F.col("view_id") >= 0)
     ).select(
@@ -410,8 +328,12 @@ def run_streaming_interval_join_full_outer(
         F.lit(0).cast("long").alias("n_matched"),
         F.round(F.col("value"), 6).alias("sum_value"),
     )
-    return clicks_side.unionByName(orphan_views)
-
+    return per_click.select(
+        F.lit("click").alias("side"),
+        F.col("click_id").alias("id"),
+        F.col("n_views").alias("n_matched"),
+        F.col("sum_view_value").alias("sum_value"),
+    ).unionByName(orphan_views)
 
 def run_streaming_dedup(
     spark: SparkSession,
@@ -429,9 +351,6 @@ def run_streaming_dedup(
     horizons should use ``dropDuplicatesWithinWatermark`` so state ages out
     instead of growing with key cardinality. Here keys are bounded
     (users × event types), the exact-distinct contract of the oracle."""
-    import uuid
-
-    name = f"dedup_{uuid.uuid4().hex[:12]}"
     ev = (
         read_events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -440,20 +359,7 @@ def run_streaming_dedup(
     dd = ev.dropDuplicates(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    q = (
-        dd.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming dedup {name!r} did not terminate within "
-            f"{timeout_sec}s; partial results discarded"
-        )
-    return spark.table(name)
+    return _replay_to_memory(dd, "append", "dedup", timeout_sec)
 
 
 def interval_join_batch(
@@ -872,9 +778,6 @@ def run_streaming_enrich(
     broadcasts it when small), so dimension updates between batches are
     picked up for free. availableNow replay → memory sink, complete mode,
     hash-comparable to the batch/SQL oracle."""
-    import uuid
-
-    name = f"enrich_{uuid.uuid4().hex[:12]}"
     dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -889,20 +792,7 @@ def run_streaming_enrich(
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming enrich {name!r} did not terminate within "
-            f"{timeout_sec}s; partial results discarded"
-        )
-    return spark.table(name)
+    return _replay_to_memory(agg, "complete", "enrich", timeout_sec)
 
 
 def run_streaming_sessionize(
@@ -924,9 +814,6 @@ def run_streaming_sessionize(
     bounded-replay/oracle contract here; an unbounded production stream
     uses append mode so the watermark finalizes and evicts closed sessions.
     """
-    import uuid
-
-    name = f"sessw_{uuid.uuid4().hex[:12]}"
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = ev.groupBy(
         F.session_window("ts", f"{gap_sec} seconds"), F.col("user_id")
@@ -934,20 +821,7 @@ def run_streaming_sessionize(
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 6).alias("sum_value"),
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming sessionize {name!r} did not terminate within "
-            f"{timeout_sec}s; partial results discarded"
-        )
-    return spark.table(name).select(
+    return _replay_to_memory(agg, "complete", "sessw", timeout_sec).select(
         "user_id",
         F.unix_micros(F.col("session_window.start")).alias("session_start_us"),
         F.unix_micros(F.col("session_window.end")).alias("session_end_us"),
@@ -1122,27 +996,12 @@ def run_streaming_user_totals(
     key per micro-batch it received data in; since the running totals only
     grow, the final state is the max-``n_events`` row per user — robust to
     availableNow splitting the replay into several batches."""
-    import uuid
-
-    name = f"utotals_{uuid.uuid4().hex[:12]}"
     ev = read_events_stream(spark, sf_dir).select("user_id", "value")
-    q = (
-        streaming_user_totals(ev)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming user totals {name!r} did not terminate within "
-            f"{timeout_sec}s; partial results discarded"
-        )
     final = F.max(F.struct("n_events", "sum_value")).alias("_m")
     return (
-        spark.table(name)
+        _replay_to_memory(
+            streaming_user_totals(ev), "update", "utotals", timeout_sec
+        )
         .groupBy("user_id")
         .agg(final)
         .select(
@@ -1156,10 +1015,10 @@ def run_streaming_user_totals(
 def streaming_tumbling_counts(
     spark: SparkSession, events: DataFrame, window_sec: int = 300
 ):
-    """True Structured Streaming variant: replays a bounded events DataFrame
-    through a memory-source stream with a watermark and event-time window.
-    Used by tests (readStream from a temp parquet dir); production would
-    point readStream at Kafka/files with the same plan."""
+    """Watermarked event-time tumbling aggregation over any STREAMING
+    events frame (the file-source replay of :func:`read_events_stream`,
+    a temp parquet dir in tests; Kafka or a file drop in production —
+    the same plan). Returns the unstarted aggregation."""
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", f"{window_sec} seconds"), F.col("event_type"))
@@ -1397,8 +1256,6 @@ def run_streaming_scd2_enrich(
     Spark re-plans the static side per micro-batch, which is also how
     dimension updates get picked up). Output: per (state-at-event-time,
     event_type) rollup, hash-comparable to the batch SQL twin."""
-    import uuid
-
     from clinical_vector_search_spark.operators.temporal import scd2_merge
 
     ev_b = read_events(spark, sf_dir).filter(F.col("user_id") < max_user)
@@ -1436,21 +1293,7 @@ def run_streaming_scd2_enrich(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    name = f"scd2enrich_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming scd2 enrich {name!r} did not terminate within "
-            f"{timeout_sec}s; partial results discarded"
-        )
-    return spark.table(name)
+    return _replay_to_memory(agg, "complete", "scd2enrich", timeout_sec)
 
 
 def time_weighted_avg(
@@ -1724,9 +1567,8 @@ def run_streaming_chained_agg(
     pre-aggregate→rollup cascade every metrics pipeline runs, without
     landing the intermediate in a sink.
 
-    Bounded replay protocol (same harness family as the outer interval
-    join): the events table replays as ONE file so nothing lands behind
-    the watermark, then two far-future sentinel batches advance the
+    Bounded replay (:func:`_sentinel_replay`): the events table replays
+    as ONE file, then two far-future sentinel batches advance the
     watermark TWICE — once to flush the inner windows into the outer
     aggregation, once more to flush the outer windows to the sink
     (append mode emits a window only when the watermark passes it; a
@@ -1737,44 +1579,9 @@ def run_streaming_chained_agg(
     Returns the same shape as :func:`chained_agg_batch`, directly
     comparable to it / the SQL oracle.
     """
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid
-
-    src = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(src)
-    max_ts_ns = _with_ts_ns(static).agg(F.max("ts_ns")).collect()[0][0]
-
-    tmp = tempfile.mkdtemp(prefix="sschain_")
-    try:
-        static.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/f0")
-        for i in (1, 2):
-            flush_ns = max_ts_ns + i * (outer_sec + watermark_sec + 3600) * NS
-            sent = spark.createDataFrame(
-                [(-1000 - i, -1, "____flush", 0.0, "{}")],
-                "event_id long, user_id long, event_type string, "
-                "value double, props string",
-            ).withColumn("ts", F.timestamp_micros(F.lit(flush_ns // 1000)))
-            sent = sent.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in static.schema.fields
-                ]
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/f{i}")
-        now = _time.time()
-        for i in (0, 1, 2):
-            d = f"{tmp}/f{i}"
-            for fn in _os.listdir(d):
-                _os.utime(f"{d}/{fn}", (now + 10 * i, now + 10 * i))
-
-        stream = _with_ts_ns(
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{tmp}/*")
-        )
+    with _sentinel_replay(
+        spark, sf_dir, ("____flush",), outer_sec + watermark_sec + 3600
+    ) as (stream, max_ts_ns):
         inner = (
             stream.withWatermark("ts", f"{watermark_sec} seconds")
             .groupBy(
@@ -1794,37 +1601,15 @@ def run_streaming_chained_agg(
             F.max("n_ev").alias("max_inner"),
             F.round(F.sum("s_v"), 6).alias("sum_value"),
         )
-        name = f"sschain_{uuid.uuid4().hex[:12]}"
-        q = (
-            outer.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"streaming chained agg {name!r} did not terminate within "
-                f"{timeout_sec}s; partial results discarded"
-            )
-        max_real_sec = max_ts_ns // NS
-        return (
-            spark.table(name)
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias(
-                    "window_start"
-                ),
-                "event_type",
-                "n_inner",
-                "n_events",
-                "max_inner",
-                "sum_value",
-            )
-            .filter(F.col("window_start") <= F.lit(max_real_sec))
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = _replay_to_memory(outer, "append", "sschain", timeout_sec)
+    return out.select(
+        F.unix_timestamp(F.col("window.start")).alias("window_start"),
+        "event_type",
+        "n_inner",
+        "n_events",
+        "max_inner",
+        "sum_value",
+    ).filter(F.col("window_start") <= F.lit(max_ts_ns // NS))
 
 
 def seasonal_index(

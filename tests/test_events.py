@@ -598,12 +598,14 @@ def test_streaming_outer_join_parity_and_trap(spark, sf_dir):
     achieves under the min-of-both-sides global watermark)."""
     from clinical_vector_search_spark.streaming.events import (
         read_events,
-        run_streaming_interval_join_outer,
+        run_streaming_interval_join,
     )
 
     got = {
         tuple(r)
-        for r in run_streaming_interval_join_outer(spark, sf_dir).collect()
+        for r in run_streaming_interval_join(
+            spark, sf_dir, "left_outer"
+        ).collect()
     }
     ev = read_events(spark, sf_dir)
     c = ev.filter(F.col("event_type") == "click").select(
@@ -643,13 +645,13 @@ def test_streaming_full_outer_join_parity(spark, sf_dir):
     null sides emitted via watermark advance."""
     from clinical_vector_search_spark.streaming.events import (
         read_events,
-        run_streaming_interval_join_full_outer,
+        run_streaming_interval_join,
     )
 
     got = {
         tuple(r)
-        for r in run_streaming_interval_join_full_outer(
-            spark, sf_dir
+        for r in run_streaming_interval_join(
+            spark, sf_dir, "full_outer"
         ).collect()
     }
     ev = read_events(spark, sf_dir)
@@ -684,6 +686,61 @@ def test_streaming_full_outer_join_parity(spark, sf_dir):
     exp = {tuple(r) for r in cl.unionByName(ov).collect()}
     assert got == exp and len(got) > 0
     assert any(r[0] == "view_orphan" for r in got)  # both sides present
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_streaming_replays_leave_no_view(spark, sf_dir):
+    """Every bounded replay drops the view its memory sink registers, and
+    the returned frames still collect their rows: their plans hold the
+    sink itself, not the catalog name."""
+    from clinical_vector_search_spark.streaming.events import (
+        run_streaming_interval_join,
+        run_streaming_tumbling,
+    )
+
+    before = _temp_views(spark)
+    tumbling = [
+        run_streaming_tumbling(spark, sf_dir, window_sec=w) for w in (300, 600)
+    ]
+    joined = run_streaming_interval_join(spark, sf_dir, "left_outer")
+    assert _temp_views(spark) == before
+    ev = read_events(spark, sf_dir)
+    n_events = ev.count()
+    for df in tumbling:
+        assert df.agg(F.sum("n_events")).first()[0] == n_events
+    # the left outer rollup has one row per click, matched or not
+    assert joined.count() == ev.filter(F.col("event_type") == "click").count()
+
+
+def test_streaming_replay_rejects_nonpositive_timeout(spark, sf_dir):
+    """A timeout <= 0 is refused before the query starts: no running
+    query and no registered view are left behind."""
+    from clinical_vector_search_spark.streaming.events import (
+        run_streaming_tumbling,
+    )
+
+    before = _temp_views(spark)
+    with pytest.raises(ValueError):
+        run_streaming_tumbling(spark, sf_dir, timeout_sec=0)
+    assert spark.streams.active == []
+    assert _temp_views(spark) == before
+
+
+def test_streaming_replay_timeout_stops_query_and_drops_view(spark, sf_dir):
+    """On timeout the partial results really are discarded: the query is
+    stopped and its memory-sink view (holding the partial rows) is gone."""
+    from clinical_vector_search_spark.streaming.events import (
+        run_streaming_tumbling,
+    )
+
+    before = _temp_views(spark)
+    with pytest.raises(TimeoutError):
+        run_streaming_tumbling(spark, sf_dir, timeout_sec=0.001)
+    assert spark.streams.active == []
+    assert _temp_views(spark) == before
 
 
 def test_drop_duplicates_within_watermark_horizon(spark, tmp_path):

@@ -1,8 +1,9 @@
 """Each operator has one implementation: the package defines no pair of
 top-level functions ``X`` and ``X_pd`` unless ``X`` is allowlisted below
 with the reason its second implementation stays, and the maintained-index
-storage protocol is spelled out only in ``io/tables.py``. Pure source
-scan, no Spark."""
+storage protocol is spelled out only in ``io/tables.py``, and the bounded
+streaming replay (memory sink, sentinel files) only in its two
+``streaming/events.py`` helpers. Pure source scan, no Spark."""
 
 from __future__ import annotations
 
@@ -77,3 +78,57 @@ def test_batch_protocol_is_written_once_in_io_tables():
         f"batch protocol steps outside io/tables.py: {offenders}; call "
         "open_batch / write_batch / read_batches instead"
     )
+
+
+# the two bounded-replay mechanisms and the one function allowed to spell
+# each: starting a memory sink and waiting on it, and writing the
+# sentinel files a replay reads one per micro-batch
+REPLAY_OWNERS = {
+    "sink": "streaming/events.py:_replay_to_memory",
+    "sentinel": "streaming/events.py:_sentinel_replay",
+}
+
+
+def _replay_step(node: ast.AST) -> str | None:
+    """The replay mechanism ``node`` belongs to, or None."""
+    if isinstance(node, ast.Constant) and node.value == "maxFilesPerTrigger":
+        return "sentinel"
+    if isinstance(node, ast.keyword) and node.arg == "maxFilesPerTrigger":
+        return "sentinel"
+    if not isinstance(node, ast.Call):
+        return None
+    name = getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+    first = node.args[0].value if node.args and isinstance(
+        node.args[0], ast.Constant
+    ) else None
+    if name in ("queryName", "awaitTermination") or (
+        name == "format" and first == "memory"
+    ):
+        return "sink"
+    if name == "utime":
+        return "sentinel"
+    return None
+
+
+def test_streaming_replay_is_written_once_in_events_helpers():
+    owners: dict[str, set[str]] = {"sink": set(), "sentinel": set()}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            where = f"{rel}:{getattr(top, 'name', top.lineno)}"
+            for node in ast.walk(top):
+                step = _replay_step(node)
+                if step is not None:
+                    owners[step].add(where)
+    offenders = sorted(
+        f"{where} ({step})"
+        for step, found in owners.items()
+        for where in found - {REPLAY_OWNERS[step]}
+    )
+    assert offenders == [], (
+        f"bounded streaming replay spelled outside its helpers: {offenders}; "
+        "call events._replay_to_memory / events._sentinel_replay instead"
+    )
+    # the helpers themselves still hold the mechanism (the guard is not
+    # vacuous after a rename)
+    assert owners == {k: {v} for k, v in REPLAY_OWNERS.items()}

@@ -340,21 +340,27 @@ def main() -> int:
         streaming_tumbling_counts,
     )
 
-    # 7a. stream-stream join: BOTH sides watermarked (state bounding) and
-    # the join carries the time-range condition. A streaming plan cannot be
-    # physically planned without starting the query, so assert on the
-    # ANALYZED plan — EventTimeWatermark nodes are exactly the state bound.
-    pairs = streaming_interval_join_pairs(spark, SF_DIR)
-    aplan = pairs._jdf.queryExecution().analyzed().toString()
-    check(
-        "streaming join: watermark on BOTH inputs (2 EventTimeWatermark)",
-        aplan.count("EventTimeWatermark") == 2,
-        f"count={aplan.count('EventTimeWatermark')}",
-    )
-    check(
-        "streaming join: time-range condition present (bounded state)",
-        "view_ts" in aplan and ">=" in aplan and "<=" in aplan,
-    )
+    # 7a. stream-stream join, for every join type the driver runs: BOTH
+    # sides watermarked (state bounding) and the join carries the
+    # time-range condition. A streaming plan cannot be physically planned
+    # without starting the query, so assert on the ANALYZED plan —
+    # EventTimeWatermark nodes are exactly the state bound.
+    for join_type in ("inner", "left_outer", "full_outer"):
+        pairs = streaming_interval_join_pairs(
+            read_events_stream(spark, SF_DIR), join_type
+        )
+        aplan = pairs._jdf.queryExecution().analyzed().toString()
+        check(
+            f"streaming {join_type} join: watermark on BOTH inputs "
+            "(2 EventTimeWatermark)",
+            aplan.count("EventTimeWatermark") == 2,
+            f"count={aplan.count('EventTimeWatermark')}",
+        )
+        check(
+            f"streaming {join_type} join: time-range condition present "
+            "(bounded state)",
+            "view_ts" in aplan and ">=" in aplan and "<=" in aplan,
+        )
 
     # 7b. streaming tumbling agg: watermarked event-time window
     sagg = streaming_tumbling_counts(
